@@ -8,30 +8,31 @@ oracles and prints every metric by name with its unit.
 Run from the root of a checkout. A run:
 
 1. starts Spark (`session.get_spark`, fixed master and shuffle partitions)
-   and builds the seeded input table (`input`);
-2. runs timed passes of the job until at least `--seconds` of pass time is
-   spent (at least one pass) and checks each pass against the oracles
-   outside the timed window;
-3. stops Spark and the JVM, waits for every process it started, removes
+   and builds the seeded input tables (`input`);
+2. times exactly one pass of the job, the first in this JVM: the cold
+   pass that every `spark-submit` of the job pays (the product runs one
+   job per fresh JVM). `--seconds` sizes nothing: the pass is a fixed
+   amount of work, about BENCHMARK.json's run_seconds on a 4-core host;
+3. checks the pass's outputs against the oracles outside the timed window;
+4. stops Spark and the JVM, waits for every process it started, removes
    its temp root and checks that nothing is left behind.
 
 `--trace 0` reports the end-to-end metrics: setup_s (process start to the
-first timed pass), job_s (median pass wall time), cpu_s (median pass CPU of
-the whole process tree: this process, the JVM and Python workers, from
-/proc) and peak_rss_mb (peak resident memory of the tree during the timed
-passes).
+start of the timed pass), job_s (wall time of the pass), cpu_s (CPU of the
+whole process tree during the pass: this process, the JVM and Python
+workers, from /proc) and peak_rss_mb (peak resident memory of the tree
+during the pass).
 
 `--trace 1` runs the same job with Spark's event log on and every layer
 call in a span tagged with `setJobGroup`, and reports the per-layer
-metrics (perfbench/README.md lists them). The tracing overhead is reported
-as `trace.overhead_cpu_s`, the CPU of Spark's event-log writer thread plus
-the spans' own bookkeeping; `trace.job_s` minus the untraced job_s of the
-same seed is its cost in wall time.
+metrics (perfbench/README.md lists them). `trace.job_s` is the traced
+pass's wall time; the tracing overhead is `trace.job_s` minus the untraced
+job_s of the same seed.
 
 The last stdout line is one JSON object {correct, attempted, failed,
-metrics}. Lines before it: CHECK (per pass: check time and results),
-HYGIENE, RUN (per-pass numbers with host steal) and, traced, TRACE (every
-span with its event-log attribution). Spark's own logging goes to stderr.
+metrics}. Lines before it: CHECK (check time and results), HYGIENE, RUN
+(the pass's numbers with host steal) and, traced, TRACE (every span with
+its event-log attribution). Spark's own logging goes to stderr.
 """
 
 from __future__ import annotations
@@ -40,7 +41,6 @@ import argparse
 import json
 import os
 import shutil
-import statistics
 import subprocess
 import sys
 import tempfile
@@ -61,6 +61,7 @@ from workloads import WORKLOADS, Ctx, Flagship, GraphDurable  # noqa: E402
 
 MASTER = "local[4]"
 SHUFFLE_PARTITIONS = 4
+EXPORT_BUCKETS = SHUFFLE_PARTITIONS
 DRIVER_MEMORY = "1g"
 RUNS_DIR = os.path.join(REPO, ".perfbench_runs")
 
@@ -72,9 +73,8 @@ SPAN_FIELDS = (
 )
 EXTRAS = (
     ("pagerank.supersteps", "count"), ("pagerank.supersteps_per_s", "1/s"),
-    ("pagerank.jobs_per_superstep", "jobs/superstep"), ("components.rounds", "count"),
-    ("labelprop.rounds", "count"), ("superstep.checkpoint_mb", "MB"),
-    ("trace.job_s", "s"), ("trace.overhead_cpu_s", "s"), ("trace.eventlog_mb", "MB"),
+    ("pagerank.jobs_per_superstep", "jobs/superstep"), ("superstep.checkpoint_mb", "MB"),
+    ("trace.job_s", "s"),
 )
 
 
@@ -88,29 +88,24 @@ class Tracer:
         self.enabled = enabled
         self.sc = None
         self.spans: list[dict] = []
-        self.own_s = 0.0  # time spent in the tracer's own bookkeeping
 
     @contextmanager
-    def span(self, name: str, label: str = ""):
+    def span(self, name: str):
         if not self.enabled:
             yield
             return
-        t0 = time.perf_counter()
-        group = f"{name}:{label}#{len(self.spans)}"
+        group = f"{name}#{len(self.spans)}"
         if self.sc is not None:
             self.sc.setJobGroup(group, name)
         snap = self.meter.snapshot()
-        self.own_s += time.perf_counter() - t0
         try:
             yield
         finally:
-            t0 = time.perf_counter()
             rec = self.meter.since(snap)
-            rec.update(name=name, label=label, group=group)
+            rec.update(name=name, group=group)
             self.spans.append(rec)
             if self.sc is not None:
                 self.sc.setLocalProperty("spark.jobGroup.id", None)
-            self.own_s += time.perf_counter() - t0
 
 
 def _session(root: str, traced: bool):
@@ -118,8 +113,6 @@ def _session(root: str, traced: bool):
         "spark.driver.memory": DRIVER_MEMORY,
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.warehouse.dir": os.path.join(root, "warehouse"),
-        "spark.driver.extraJavaOptions":
-            f"-Djava.io.tmpdir={os.path.join(root, 'tmp')} -XX:-UsePerfData",
     }
     if traced:
         os.makedirs(os.path.join(root, "eventlog"))
@@ -134,17 +127,6 @@ def _session(root: str, traced: bool):
     )
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-def _eventlog_cpu_s(spark) -> float:
-    """CPU time of the JVM thread that writes Spark's event log: the work
-    tracing adds to the job (0 when the event log is off)."""
-    jvm = spark.sparkContext._jvm
-    mx = jvm.java.lang.management.ManagementFactory.getThreadMXBean()
-    for t in jvm.java.lang.Thread.getAllStackTraces().keySet():
-        if t.getName() == "spark-listener-group-eventLog":
-            return mx.getThreadCpuTime(t.getId()) / 1e9
-    return 0.0
 
 
 def _stop_spark(spark) -> None:
@@ -196,9 +178,9 @@ def _dir_mb(path: str) -> float:
     return size / (1024.0 * 1024.0)
 
 
-def _layer_metrics(spans: list, attribution: dict, n_passes: int) -> dict:
-    """Per-span metrics: set-up spans as measured, pass spans as the mean
-    over the timed passes. Spans a workload does not run read 0."""
+def _layer_metrics(spans: list, attribution: dict) -> dict:
+    """Per-span metrics, summed over the spans of one name. Spans a
+    workload does not run read 0."""
     names = SETUP_SPANS + Flagship.layers + GraphDurable.layers
     totals = {n: {f: 0.0 for f, _ in SPAN_FIELDS} for n in names}
     for sp in spans:
@@ -207,31 +189,23 @@ def _layer_metrics(spans: list, attribution: dict, n_passes: int) -> dict:
             t[f] += sp[f]
         for f, v in attribution.get(sp["group"], {}).items():
             t[f] += v
-    out = {}
-    for n in names:
-        div = 1 if n in SETUP_SPANS else n_passes
-        for f, unit in SPAN_FIELDS:
-            out[f"{n}.{f}"] = {"value": totals[n][f] / div, "unit": unit}
-    return out
+    return {f"{n}.{f}": {"value": totals[n][f], "unit": unit}
+            for n in names for f, unit in SPAN_FIELDS}
 
 
-def _extra_metrics(spans: list, attribution: dict, passes: list, extras: dict,
-                   root: str, overhead_cpu_s: float) -> dict:
-    """Layer counters of the workload plus PageRank rates and the trace's
-    own cost. Counters a workload does not have read 0."""
+def _extra_metrics(spans: list, attribution: dict, job: dict, extras: dict) -> dict:
+    """Layer counters of the workload, PageRank rates and the traced pass
+    time. Counters a workload does not have read 0."""
     derived = dict(extras)
-    # PageRank's own spans: its first leg and its resumed leg
-    pr = [sp for sp in spans
-          if sp["name"] == "operators.pagerank" or sp["label"] == "pagerank"]
-    steps = extras.get("pagerank.supersteps", 0) * len(passes)
+    # PageRank's first leg and its resumed leg
+    pr = [sp for sp in spans if sp["name"] in ("operators.pagerank", "superstep.resume")]
+    steps = extras.get("pagerank.supersteps", 0)
     if steps:
         derived["pagerank.supersteps_per_s"] = steps / sum(sp["wall_s"] for sp in pr)
         derived["pagerank.jobs_per_superstep"] = sum(
             attribution.get(sp["group"], {}).get("jobs", 0) for sp in pr
         ) / steps
-    derived["trace.job_s"] = statistics.median(p["wall_s"] for p in passes)
-    derived["trace.overhead_cpu_s"] = overhead_cpu_s
-    derived["trace.eventlog_mb"] = _dir_mb(os.path.join(root, "eventlog"))
+    derived["trace.job_s"] = job["wall_s"]
     return {name: {"value": derived.get(name, 0), "unit": unit} for name, unit in EXTRAS}
 
 
@@ -252,6 +226,10 @@ def main() -> int:
         os.makedirs(os.path.join(root, sub))
     os.environ["TMPDIR"] = os.path.join(root, "tmp")
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(root, "local")
+    # every JVM the run starts (spark-submit's launcher and the driver)
+    os.environ["JAVA_TOOL_OPTIONS"] = (
+        f"-Djava.io.tmpdir={os.path.join(root, 'tmp')} -XX:-UsePerfData"
+    )
     # the JVM's Python workers import deeprank_spark from the checkout
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (REPO, os.environ.get("PYTHONPATH")) if p
@@ -268,57 +246,46 @@ def main() -> int:
             spark = _session(root, traced)
         tracer.sc = spark.sparkContext
         sampler = probe.RssSampler(me).start()
-        ctx = Ctx(spark=spark, seed=args.seed, root=root, repo=REPO, tracer=tracer)
+        ctx = Ctx(spark=spark, seed=args.seed, root=root, repo=REPO, tracer=tracer,
+                  buckets=EXPORT_BUCKETS)
         with tracer.span("input"):
             wl.make_input(ctx)
-
         setup_s = time.time() - t_start
-        passes, attempted, failed, extras = [], 0, 0, {}
-        while not passes or sum(p["wall_s"] for p in passes) < args.seconds:
-            tag = f"pass{len(passes)}"
-            sampler.reset()
-            snap = meter.snapshot()
-            out = wl.run_pass(ctx, tag)
-            rec = meter.since(snap)
-            rec["peak_rss_mb"] = sampler.peak_mb()
-            passes.append(rec)
 
-            c0 = time.time()
-            results = wl.check(ctx, out)
-            check_s = time.time() - c0
-            ops: dict[str, bool] = {}
-            for key, ok in results.items():
-                layer = key.split("/")[0]
-                ops[layer] = ops.get(layer, True) and bool(ok)
-            attempted += len(ops)
-            failed += sum(1 for ok in ops.values() if not ok)
-            print("CHECK " + json.dumps({"pass": tag, "check_s": check_s,
-                                         "results": results}), flush=True)
-            extras = wl.extras(ctx, out)
-            wl.release(ctx, out)
-            spark.catalog.clearCache()
-            shutil.rmtree(ctx.path(tag), ignore_errors=True)
+        sampler.reset()
+        snap = meter.snapshot()
+        out = wl.run_pass(ctx)
+        job = meter.since(snap)
+        job["peak_rss_mb"] = sampler.peak_mb()
+
+        c0 = time.time()
+        results = wl.check(ctx, out)
+        check_s = time.time() - c0
+        ops: dict[str, bool] = {}
+        for key, ok in results.items():
+            layer = key.split("/")[0]
+            ops[layer] = ops.get(layer, True) and bool(ok)
+        attempted = len(ops)
+        failed = sum(1 for ok in ops.values() if not ok)
+        print("CHECK " + json.dumps({"check_s": check_s, "results": results,
+                                     **wl.notes(out)}), flush=True)
+        extras = wl.extras(ctx, out)
 
         disk_mb = _dir_mb(root)
-        eventlog_cpu_s = _eventlog_cpu_s(spark) if traced else 0.0
         _stop_spark(spark)
         spark = None
         killed = _wait_children()
         if traced:
             attribution = eventlog.attribute(os.path.join(root, "eventlog"))
-            metrics = _layer_metrics(tracer.spans, attribution, len(passes))
-            metrics.update(_extra_metrics(tracer.spans, attribution, passes, extras,
-                                          root, eventlog_cpu_s + tracer.own_s))
+            metrics = _layer_metrics(tracer.spans, attribution)
+            metrics.update(_extra_metrics(tracer.spans, attribution, job, extras))
             print("TRACE " + json.dumps({"spans": tracer.spans,
                                          "attribution": attribution}), flush=True)
         else:
             metrics = {
-                "job_s": {"value": statistics.median(p["wall_s"] for p in passes),
-                          "unit": "s"},
-                "cpu_s": {"value": statistics.median(p["tree_cpu_s"] for p in passes),
-                          "unit": "s"},
-                "peak_rss_mb": {"value": max(p["peak_rss_mb"] for p in passes),
-                                "unit": "MB"},
+                "job_s": {"value": job["wall_s"], "unit": "s"},
+                "cpu_s": {"value": job["tree_cpu_s"], "unit": "s"},
+                "peak_rss_mb": {"value": job["peak_rss_mb"], "unit": "MB"},
                 "setup_s": {"value": setup_s, "unit": "s"},
             }
     finally:
@@ -338,7 +305,7 @@ def main() -> int:
                                    "processes_killed": killed}), flush=True)
     print("RUN " + json.dumps({"workload": args.workload, "seed": args.seed,
                                "master": MASTER, "shuffle_partitions": SHUFFLE_PARTITIONS,
-                               "setup_s": setup_s, "passes": passes}), flush=True)
+                               "setup_s": setup_s, "job": job}), flush=True)
     print(json.dumps({"correct": failed == 0 and removed and killed == 0,
                       "attempted": attempted, "failed": failed,
                       "metrics": metrics}), flush=True)

@@ -47,7 +47,18 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .components import _ResetDir
-from .superstep import KernelRun, SuperstepCheckpointer
+from .superstep import KernelRun, SuperstepCheckpointer, pinned_plan
+
+
+def _sum_normalized(state: DataFrame) -> DataFrame:
+    sums = F.broadcast(
+        state.agg(F.sum("hub").alias("hsum"), F.sum("auth").alias("asum"))
+    )
+    return state.crossJoin(sums).select(
+        "id",
+        (F.col("hub") / F.col("hsum")).alias("hub"),
+        (F.col("auth") / F.col("asum")).alias("auth"),
+    )
 
 
 def hits_distributed(
@@ -86,64 +97,7 @@ def hits_distributed(
     else:
         m = e.count()
         P = max(4, min(default_P, m // 100_000 + 4))
-    saved_conf = {
-        "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-        "spark.sql.adaptive.coalescePartitions.enabled": spark.conf.get(
-            "spark.sql.adaptive.coalescePartitions.enabled"
-        ),
-    }
-    spark.conf.set("spark.sql.shuffle.partitions", str(P))
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-
-    # two partitionings of the same edge list: the h->a gather joins on
-    # src, the a->h gather joins on dst. Renamed columns for the same
-    # self-join-ambiguity reason as pagerank's edges_deg.
-    e_by_src = (
-        e.select(F.col("src").alias("es"), F.col("dst").alias("ed"))
-        .repartition(P, "es")
-        .persist()
-    )
-    e_by_dst = (
-        e.select(F.col("src").alias("fs"), F.col("dst").alias("fd"))
-        .repartition(P, "fd")
-        .persist()
-    )
-    m_edges = e_by_src.count()
-    e_by_dst.count()
-    base = verts.repartition(P, "id").persist()
-    n = base.count()
-
-    def _finalize(state):
-        if state is None:
-            return base.select(
-                "id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth")
-            )
-        sums = F.broadcast(
-            state.agg(
-                F.sum("hub").alias("hsum"), F.sum("auth").alias("asum")
-            )
-        )
-        return state.crossJoin(sums).select(
-            "id",
-            (F.col("hub") / F.col("hsum")).alias("hub"),
-            (F.col("auth") / F.col("asum")).alias("auth"),
-        )
-
     metrics: list = []
-    if n == 0 or m_edges == 0:
-        # nx raises ZeroDivisionError on an edgeless graph; returning the
-        # all-zero fixpoint is the documented divergence (tested)
-        state = base.select(
-            "id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth")
-        ).localCheckpoint(eager=True)
-        for fr in (e_by_src, e_by_dst, base):
-            fr.unpersist()
-        for k, v in saved_conf.items():
-            spark.conf.set(k, v)
-        if return_run:
-            return KernelRun(state, 0, [], time.time() - t0, True)
-        return state
-
     durable = checkpoint_dir is not None
     ckpt = (
         SuperstepCheckpointer(checkpoint_dir, run_id, ("id", "hub", "auth"))
@@ -152,123 +106,153 @@ def hits_distributed(
     )
     step = 0
     converged = False
-    state = None
-    if durable and resume:
-        st, done_steps, was_converged = ckpt.resume(spark)
-        if st is not None:
-            state = st.select("id", "hub", "auth").repartition(P, "id")
-            step = done_steps
-            converged = was_converged
-    if state is None:
-        state = base.select(
-            "id", F.lit(1.0 / n).alias("hub"), F.lit(0.0).alias("auth")
-        ).localCheckpoint(eager=True)
-
-    kept = [state]
-    rdir = _ResetDir("hits")
-    last_written = step if durable and resume else -1
     err = None
-    try:
-        while not converged and step < max_iter:
-            it0 = time.time()
-            araw = (
-                state.select(F.col("id").alias("hid"), "hub")
-                .join(e_by_src, F.col("hid") == F.col("es"))
-                .select(F.col("ed").alias("id"), F.col("hub").alias("c"), F.col("es").alias("okey"))
-            )
-            if salt_buckets > 1:
+    with pinned_plan(spark, P):
+        # two partitionings of the same edge list: the h->a gather joins on
+        # src, the a->h gather joins on dst. Renamed columns for the same
+        # self-join-ambiguity reason as pagerank's edges_deg. Each copy is
+        # cached sorted on its join key, so the sort-merge gathers sort only
+        # the vertex side.
+        e_by_src = (
+            e.select(F.col("src").alias("es"), F.col("dst").alias("ed"))
+            .repartition(P, "es")
+            .sortWithinPartitions("es")
+            .persist()
+        )
+        e_by_dst = (
+            e.select(F.col("src").alias("fs"), F.col("dst").alias("fd"))
+            .repartition(P, "fd")
+            .sortWithinPartitions("fd")
+            .persist()
+        )
+        base = verts.repartition(P, "id").persist()
+        try:
+            m_edges = e_by_src.count()
+            e_by_dst.count()
+            n = base.count()
+            if n == 0 or m_edges == 0:
+                # nx raises ZeroDivisionError on an edgeless graph; returning
+                # the all-zero fixpoint is the documented divergence (tested)
+                state = base.select(
+                    "id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth")
+                ).localCheckpoint(eager=True)
+                if return_run:
+                    return KernelRun(state, 0, [], time.time() - t0, True)
+                return state
+
+            state = None
+            if durable and resume:
+                st, done_steps, was_converged = ckpt.resume(spark)
+                if st is not None:
+                    state = st.select("id", "hub", "auth").repartition(P, "id")
+                    step = done_steps
+                    converged = was_converged
+            if state is None:
+                state = base.select(
+                    "id", F.lit(1.0 / n).alias("hub"), F.lit(0.0).alias("auth")
+                ).localCheckpoint(eager=True)
+
+            kept = [state]
+            rdir = _ResetDir("hits")
+            last_written = step if durable and resume else -1
+            while not converged and step < max_iter:
+                it0 = time.time()
                 araw = (
-                    araw.withColumn(
-                        "salt", F.pmod(F.xxhash64("okey"), F.lit(salt_buckets))
-                    )
-                    .groupBy("id", "salt")
-                    .agg(F.sum("c").alias("c"))
+                    state.select(F.col("id").alias("hid"), "hub")
+                    .join(e_by_src, F.col("hid") == F.col("es"))
+                    .select(F.col("ed").alias("id"), F.col("hub").alias("c"), F.col("es").alias("okey"))
                 )
-            araw = araw.groupBy("id").agg(F.sum("c").alias("av"))
-            # the h-gather groups on the SOURCE id: its fan-in per key is
-            # that source's out-degree, which degree-capped link graphs
-            # bound; the in-degree hub skew salting targets lives in the
-            # a-gather above, so only that one pays the two-phase pass
-            # (measured: salting both made the salted variant strictly
-            # slower on an in-hub graph — the second pass bought nothing)
-            hraw = (
-                araw.select(F.col("id").alias("aid"), "av")
-                .join(e_by_dst, F.col("aid") == F.col("fd"))
-                .select(F.col("fs").alias("id"), F.col("av").alias("c"))
-                .groupBy("id")
-                .agg(F.sum("c").alias("hv"))
-            )
-            # ONE materialization per superstep: the raw gather sums land
-            # in an eager checkpoint with the max-normalizers riding it as
-            # observed metrics (computing them as separate scalar
-            # aggregates would replay both gather joins — the araw subtree
-            # ~4x). The normalized state is then a lazy map-only SELECT
-            # over the checkpointed frame; the L1 error is a second scan
-            # of the SAME materialized blocks (no shuffle, no recompute).
-            obs = Observation(f"hits_step_{run_id}_{step + 1}")
-            joined = base.join(araw, "id", "left").join(hraw, "id", "left")
-            if tol > 0:
-                # the L1 stop criterion needs last round's hub alongside
-                # this round's raw sums; fixed-iteration mode skips both
-                # the join and the error scan
-                joined = joined.join(
-                    state.select("id", F.col("hub").alias("prev_hub")), "id"
-                )
-            cols = [
-                F.col("id"),
-                F.coalesce(F.col("av"), F.lit(0.0)).alias("av"),
-                F.coalesce(F.col("hv"), F.lit(0.0)).alias("hv"),
-            ] + ([F.col("prev_hub")] if tol > 0 else [])
-            ah = (
-                joined.select(*cols)
-                .observe(
-                    obs,
-                    F.max(F.col("av")).alias("amax"),
-                    F.max(F.col("hv")).alias("hmax"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            row = obs.get
-            amax, hmax = float(row["amax"]), float(row["hmax"])
-            if tol > 0:
-                err = float(
-                    ah.agg(
-                        F.sum(
-                            F.abs(F.col("hv") / F.lit(hmax) - F.col("prev_hub"))
+                if salt_buckets > 1:
+                    araw = (
+                        araw.withColumn(
+                            "salt", F.pmod(F.xxhash64("okey"), F.lit(salt_buckets))
                         )
-                    ).first()[0]
+                        .groupBy("id", "salt")
+                        .agg(F.sum("c").alias("c"))
+                    )
+                araw = araw.groupBy("id").agg(F.sum("c").alias("av"))
+                # the h-gather groups on the SOURCE id: its fan-in per key is
+                # that source's out-degree, which degree-capped link graphs
+                # bound; the in-degree hub skew salting targets lives in the
+                # a-gather above, so only that one pays the two-phase pass
+                # (measured: salting both made the salted variant strictly
+                # slower on an in-hub graph — the second pass bought nothing)
+                hraw = (
+                    araw.select(F.col("id").alias("aid"), "av")
+                    .join(e_by_dst, F.col("aid") == F.col("fd"))
+                    .select(F.col("fs").alias("id"), F.col("av").alias("c"))
+                    .groupBy("id")
+                    .agg(F.sum("c").alias("hv"))
                 )
-            else:
-                # fixed-iteration mode never reads the error: don't pay a
-                # second scan per superstep just to log it
-                err = -1.0
-            kept.append(ah)
-            state = ah.select(
-                "id",
-                (F.col("hv") / F.lit(hmax)).alias("hub"),
-                (F.col("av") / F.lit(amax)).alias("auth"),
-            )
-            step += 1
-            wall_ms = (time.time() - it0) * 1000.0
-            converged = tol > 0 and err < tol
-            metrics.append({"superstep": step, "l1_delta": err, "wall_ms": wall_ms})
-            if durable and (step % checkpoint_interval == 0 or converged):
-                # the protocol's `changed` slot (an int) carries the L1
-                # delta scaled to nano-resolution — a monotone convergence
-                # signal an auditor can read off the _DONE markers
-                state = ckpt.write(state, step, wall_ms,
-                                   int(err * 1e9) if err >= 0 else -1, converged)
-                last_written = step
-                kept.clear()
-            elif (step % 5) == 0:
-                state = rdir.reset(state, step)
-                kept.clear()
-    finally:
-        for k, v in saved_conf.items():
-            spark.conf.set(k, v)
-        e_by_src.unpersist()
-        e_by_dst.unpersist()
-        base.unpersist()
+                # ONE materialization per superstep: the raw gather sums land
+                # in an eager checkpoint with the max-normalizers riding it as
+                # observed metrics (computing them as separate scalar
+                # aggregates would replay both gather joins — the araw subtree
+                # ~4x). The normalized state is then a lazy map-only SELECT
+                # over the checkpointed frame; the L1 error is a second scan
+                # of the SAME materialized blocks (no shuffle, no recompute).
+                obs = Observation(f"hits_step_{run_id}_{step + 1}")
+                joined = base.join(araw, "id", "left").join(hraw, "id", "left")
+                if tol > 0:
+                    # the L1 stop criterion needs last round's hub alongside
+                    # this round's raw sums; fixed-iteration mode skips both
+                    # the join and the error scan
+                    joined = joined.join(
+                        state.select("id", F.col("hub").alias("prev_hub")), "id"
+                    )
+                cols = [
+                    F.col("id"),
+                    F.coalesce(F.col("av"), F.lit(0.0)).alias("av"),
+                    F.coalesce(F.col("hv"), F.lit(0.0)).alias("hv"),
+                ] + ([F.col("prev_hub")] if tol > 0 else [])
+                ah = (
+                    joined.select(*cols)
+                    .observe(
+                        obs,
+                        F.max(F.col("av")).alias("amax"),
+                        F.max(F.col("hv")).alias("hmax"),
+                    )
+                    .localCheckpoint(eager=True)
+                )
+                row = obs.get
+                amax, hmax = float(row["amax"]), float(row["hmax"])
+                if tol > 0:
+                    err = float(
+                        ah.agg(
+                            F.sum(
+                                F.abs(F.col("hv") / F.lit(hmax) - F.col("prev_hub"))
+                            )
+                        ).first()[0]
+                    )
+                else:
+                    # fixed-iteration mode never reads the error: don't pay a
+                    # second scan per superstep just to log it
+                    err = -1.0
+                kept.append(ah)
+                state = ah.select(
+                    "id",
+                    (F.col("hv") / F.lit(hmax)).alias("hub"),
+                    (F.col("av") / F.lit(amax)).alias("auth"),
+                )
+                step += 1
+                wall_ms = (time.time() - it0) * 1000.0
+                converged = tol > 0 and err < tol
+                metrics.append({"superstep": step, "l1_delta": err, "wall_ms": wall_ms})
+                if durable and (step % checkpoint_interval == 0 or converged):
+                    # the protocol's `changed` slot (an int) carries the L1
+                    # delta scaled to nano-resolution — a monotone convergence
+                    # signal an auditor can read off the _DONE markers
+                    state = ckpt.write(state, step, wall_ms,
+                                       int(err * 1e9) if err >= 0 else -1, converged)
+                    last_written = step
+                    kept.clear()
+                elif (step % 5) == 0:
+                    state = rdir.reset(state, step)
+                    kept.clear()
+        finally:
+            e_by_src.unpersist()
+            e_by_dst.unpersist()
+            base.unpersist()
 
     if durable and step > last_written:
         # the marker records LOOP convergence (tol>0 fixpoint) only: a
@@ -288,7 +272,7 @@ def hits_distributed(
             f"hits_distributed: no convergence in {max_iter} supersteps "
             f"(last l1={err})"
         )
-    out = _finalize(state if durable else rdir.finalize(state))
+    out = _sum_normalized(state if durable else rdir.finalize(state))
     if return_run:
         return KernelRun(out, step, metrics, time.time() - t0, converged)
     return out
@@ -300,7 +284,9 @@ def hits_per_conv(gedges: DataFrame, max_iter: int = 100, tol: float = 1.0e-8) -
     parallel applyInPandas shape as pagerank_per_conv: ONE conv_id
     shuffle, the whole power iteration vectorized in numpy per group).
     Directed simple projection (parallel edges collapsed); the nx
-    schedule, including the edgeless all-zero divergence."""
+    schedule, including the edgeless all-zero divergence. tol=0 runs
+    exactly max_iter iterations; tol>0 raises (inside the task, so the
+    action fails) when any conversation has not converged by max_iter."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
@@ -346,6 +332,12 @@ def hits_per_conv(gedges: DataFrame, max_iter: int = 100, tol: float = 1.0e-8) -
                 a = a / a.max()
                 if tol > 0 and np.abs(h - hlast).sum() < tol:
                     break
+            else:
+                if tol > 0:  # nx and hits_distributed raise too
+                    raise RuntimeError(
+                        f"hits_per_conv: conversation {conv}: no convergence "
+                        f"in {max_iter} iterations"
+                    )
             a = a / a.sum()
             h = h / h.sum()
         else:
@@ -408,110 +400,98 @@ def eigenvector_distributed(
     else:
         m = e.count()
         P = max(4, min(default_P, m // 100_000 + 4))
-    saved_conf = {
-        "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-        "spark.sql.adaptive.coalescePartitions.enabled": spark.conf.get(
-            "spark.sql.adaptive.coalescePartitions.enabled"
-        ),
-    }
-    spark.conf.set("spark.sql.shuffle.partitions", str(P))
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    e_by_src = (
-        e.select(F.col("src").alias("es"), F.col("dst").alias("ed"))
-        .repartition(P, "es")
-        .persist()
-    )
-    e_by_src.count()
-    base = verts.repartition(P, "id").persist()
-    n = base.count()
-    if n == 0:
-        e_by_src.unpersist()
-        base.unpersist()
-        for k, v in saved_conf.items():
-            spark.conf.set(k, v)
-        out = base.select("id", F.lit(0.0).alias("centrality"))
-        return KernelRun(out, 0, [], time.time() - t0, True) if return_run else out
-
     durable = checkpoint_dir is not None
     ckpt = (
         SuperstepCheckpointer(checkpoint_dir, run_id, ("id", "x"))
         if durable
         else None
     )
+    metrics: list = []
     step = 0
     converged = False
-    state = None
-    if durable and resume:
-        st, done_steps, was_converged = ckpt.resume(spark)
-        if st is not None:
-            state = st.select("id", "x").repartition(P, "id")
-            step = done_steps
-            converged = was_converged
-    if state is None:
-        state = base.select("id", F.lit(1.0 / n).alias("x")).localCheckpoint(
-            eager=True
-        )
-
-    metrics: list = []
-    kept = [state]
-    rdir = _ResetDir("eig")
-    last_written = step if durable and resume else -1
     err = None
-    try:
-        while not converged and step < max_iter:
-            it0 = time.time()
-            contrib = (
-                state.select(F.col("id").alias("sid"), "x")
-                .join(e_by_src, F.col("sid") == F.col("es"))
-                .select(F.col("ed").alias("id"), F.col("x").alias("c"), F.col("es").alias("okey"))
-            )
-            if salt_buckets > 1:
+    with pinned_plan(spark, P):
+        e_by_src = (
+            e.select(F.col("src").alias("es"), F.col("dst").alias("ed"))
+            .repartition(P, "es")
+            .sortWithinPartitions("es")
+            .persist()
+        )
+        base = verts.repartition(P, "id").persist()
+        try:
+            e_by_src.count()
+            n = base.count()
+            if n == 0:
+                out = base.select("id", F.lit(0.0).alias("centrality"))
+                return KernelRun(out, 0, [], time.time() - t0, True) if return_run else out
+
+            state = None
+            if durable and resume:
+                st, done_steps, was_converged = ckpt.resume(spark)
+                if st is not None:
+                    state = st.select("id", "x").repartition(P, "id")
+                    step = done_steps
+                    converged = was_converged
+            if state is None:
+                state = base.select("id", F.lit(1.0 / n).alias("x")).localCheckpoint(
+                    eager=True
+                )
+
+            kept = [state]
+            rdir = _ResetDir("eig")
+            last_written = step if durable and resume else -1
+            while not converged and step < max_iter:
+                it0 = time.time()
                 contrib = (
-                    contrib.withColumn(
-                        "salt", F.pmod(F.xxhash64("okey"), F.lit(salt_buckets))
+                    state.select(F.col("id").alias("sid"), "x")
+                    .join(e_by_src, F.col("sid") == F.col("es"))
+                    .select(F.col("ed").alias("id"), F.col("x").alias("c"), F.col("es").alias("okey"))
+                )
+                if salt_buckets > 1:
+                    contrib = (
+                        contrib.withColumn(
+                            "salt", F.pmod(F.xxhash64("okey"), F.lit(salt_buckets))
+                        )
+                        .groupBy("id", "salt")
+                        .agg(F.sum("c").alias("c"))
                     )
-                    .groupBy("id", "salt")
-                    .agg(F.sum("c").alias("c"))
+                summed = contrib.groupBy("id").agg(F.sum("c").alias("c"))
+                obs = Observation(f"eig_step_{run_id}_{step + 1}")
+                raw = (
+                    base.join(summed, "id", "left")
+                    .join(state.select("id", F.col("x").alias("prev")), "id")
+                    .select(
+                        "id",
+                        (F.col("prev") + F.coalesce(F.col("c"), F.lit(0.0))).alias(
+                            "raw"
+                        ),
+                        "prev",
+                    )
+                    .observe(obs, F.sum(F.col("raw") * F.col("raw")).alias("ss"))
+                    .localCheckpoint(eager=True)
                 )
-            summed = contrib.groupBy("id").agg(F.sum("c").alias("c"))
-            obs = Observation(f"eig_step_{run_id}_{step + 1}")
-            raw = (
-                base.join(summed, "id", "left")
-                .join(state.select("id", F.col("x").alias("prev")), "id")
-                .select(
-                    "id",
-                    (F.col("prev") + F.coalesce(F.col("c"), F.lit(0.0))).alias(
-                        "raw"
-                    ),
-                    "prev",
+                norm = float(obs.get["ss"]) ** 0.5 or 1.0
+                err = float(
+                    raw.agg(
+                        F.sum(F.abs(F.col("raw") / F.lit(norm) - F.col("prev")))
+                    ).first()[0]
                 )
-                .observe(obs, F.sum(F.col("raw") * F.col("raw")).alias("ss"))
-                .localCheckpoint(eager=True)
-            )
-            norm = float(obs.get["ss"]) ** 0.5 or 1.0
-            err = float(
-                raw.agg(
-                    F.sum(F.abs(F.col("raw") / F.lit(norm) - F.col("prev")))
-                ).first()[0]
-            )
-            kept.append(raw)
-            state = raw.select("id", (F.col("raw") / F.lit(norm)).alias("x"))
-            step += 1
-            wall_ms = (time.time() - it0) * 1000.0
-            converged = err < n * tol
-            metrics.append({"superstep": step, "l1_delta": err, "wall_ms": wall_ms})
-            if durable and (step % checkpoint_interval == 0 or converged):
-                state = ckpt.write(state, step, wall_ms, int(err * 1e9), converged)
-                last_written = step
-                kept.clear()
-            elif (step % 5) == 0:
-                state = rdir.reset(state, step)
-                kept.clear()
-    finally:
-        for k, v in saved_conf.items():
-            spark.conf.set(k, v)
-        e_by_src.unpersist()
-        base.unpersist()
+                kept.append(raw)
+                state = raw.select("id", (F.col("raw") / F.lit(norm)).alias("x"))
+                step += 1
+                wall_ms = (time.time() - it0) * 1000.0
+                converged = err < n * tol
+                metrics.append({"superstep": step, "l1_delta": err, "wall_ms": wall_ms})
+                if durable and (step % checkpoint_interval == 0 or converged):
+                    state = ckpt.write(state, step, wall_ms, int(err * 1e9), converged)
+                    last_written = step
+                    kept.clear()
+                elif (step % 5) == 0:
+                    state = rdir.reset(state, step)
+                    kept.clear()
+        finally:
+            e_by_src.unpersist()
+            base.unpersist()
     if durable and step > last_written:
         state = ckpt.write(
             state,

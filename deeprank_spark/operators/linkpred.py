@@ -142,8 +142,8 @@ def negative_edge_samples(
     """Deterministic negative sampling for link-prediction / embedding
     training: for every vertex u, up to `per_vertex` candidate pairs
     (u, v) where v is hash-picked uniformly from the global vertex list
-    and (u, v) is NOT an observed edge (self-pairs and duplicates also
-    dropped). -> (src, dst, slot).
+    and (u, v) is NOT an observed edge (self-pairs dropped; a pair two
+    slots both pick is kept once, with the lower slot). -> (src, dst, slot).
 
     The pick is verts_sorted[ H(seed|u|slot) % V ] with the portable
     md5-prefix hash, so the sample is reproducible across runs/engines
@@ -229,8 +229,11 @@ def negative_edge_samples(
     picked = cand.join(indexed, "ix").select(
         "src", F.col("id").alias("dst"), "slot"
     )
+    # two slots of one vertex can pick the same v: keep the pair once, at
+    # its lowest slot
     return (
         picked.where(F.col("src") != F.col("dst"))
         .join(e, (picked["src"] == e["s"]) & (picked["dst"] == e["d"]), "left_anti")
-        .distinct()
+        .groupBy("src", "dst")
+        .agg(F.min("slot").alias("slot"))
     )

@@ -30,7 +30,6 @@ Two physical strategies for one logical kernel:
 from __future__ import annotations
 
 import atexit
-import json
 import os
 import shutil
 import tempfile
@@ -45,6 +44,13 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+)
+
+from .superstep import (
+    completed_supersteps,
+    pinned_plan,
+    read_marker,
+    write_marker,
 )
 
 PER_CONV_SCHEMA = StructType(
@@ -308,206 +314,211 @@ def pagerank_distributed(
     plan is expression-identical to the unweighted kernel (count-based
     degree), so the flagship path is untouched.
 
-    Scale design: `edges_deg` (edges ⋈ out-degree) is materialized once,
-    hash-partitioned on src and cached — every superstep reuses that
-    partitioning for the gather join. Contributions aggregate with Spark's
-    partial (map-side) aggregation; `salt_buckets > 0` adds an explicit
-    two-phase (dst, salt)->dst aggregation for power-law fan-in hubs.
-    One driver action per superstep (the eager state checkpoint); the
-    (L1 delta, dangling mass) read rides it as observed metrics.
-    `checkpoint_dir` makes state durable every `checkpoint_interval`
-    supersteps plus a per-partition lineage table; `resume=True` restarts
-    from the latest complete superstep and reproduces the identical final
-    state (same floating-point schedule).
+    Scale design: ONE Spark job with ONE exchange per superstep. The call
+    runs under one fixed plan (superstep.pinned_plan: AQE and broadcast
+    joins off, P shuffle partitions). The state (id, rank, p, dangling)
+    stays hash-partitioned on id and sorted within partitions through its
+    eager localCheckpoint; `edges_deg` (edges with the source's
+    out-degree) is materialized once, hash-partitioned and sorted on src,
+    as a local checkpoint too. The gather
+    join is therefore a sort-merge join with no exchange and no sort on
+    either side. Contributions aggregate with Spark's partial (map-side)
+    aggregation into the one exchange, on dst, whose output joins the
+    co-partitioned state without another. (Under the session defaults
+    the gather join was instead a broadcast of the whole cached edge
+    table every superstep, and AQE re-shuffled the checkpointed state.)
+    `salt_buckets > 0` adds an explicit two-phase (dst, salt)->dst
+    aggregation for power-law fan-in hubs, a second exchange. The (L1
+    delta, dangling mass) read rides the state checkpoint as observed
+    metrics. Set-up is two jobs: one aggregation yields every vertex with
+    its out-degree and personalization weight and observes n, m, the
+    dangling count and the personalization total (so the initial
+    dangling mass needs no job); one job materializes `edges_deg`.
 
-    NOT re-entrant on a shared SparkSession: the loop pins
-    spark.sql.shuffle.partitions to P and disables AQE partition
-    coalescing for its duration (restored in finally) so superstep
-    co-partitioning survives; a concurrent query on the SAME session would
-    run under those settings. Kernel jobs own their session (spark-submit
-    per job, jobs/run_flagship.py); give concurrent interactive work its
-    own session or serialize kernel calls.
+    `checkpoint_dir` makes state durable every `checkpoint_interval`
+    supersteps plus a per-partition lineage table; durable state is
+    exactly (id, rank). `resume=True` restarts from the latest complete
+    superstep, taking its dangling mass from the _DONE marker, and
+    reproduces the identical final state (same floating-point schedule).
+    NOT re-entrant on a shared SparkSession (see pinned_plan).
     """
     spark = edges.sparkSession
     t0 = time.time()
     src, dst = id_cols
-    if weight_col is not None:
-        e = edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight_col).cast("double").alias("w"),
-        )
-    else:
-        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    weighted = weight_col is not None
+    e = edges.select(
+        F.col(src).alias("src"),
+        F.col(dst).alias("dst"),
+        *([F.col(weight_col).cast("double").alias("w")] if weighted else []),
+    )
 
-    if vertices is None:
-        vertices = (
-            e.select(F.col("src").alias("id"))
-            .union(e.select(F.col("dst").alias("id")))
-            .distinct()
+    # One row per edge end, vertex row and personalization row: k counts
+    # out-edges, d sums the out-degree (k, or the out-weight: an all-zero
+    # out-weight vertex is dangling, see doc), v marks a vertex, pw sums
+    # the personalization weight.
+    zero_d = F.lit(0.0) if weighted else F.lit(0)
+    isv = F.lit(vertices is None)
+    ends = e.select(
+        F.col("src").alias("id"),
+        F.lit(1).alias("k"),
+        (F.col("w") if weighted else F.lit(1)).alias("d"),
+        isv.alias("v"),
+        F.lit(0.0).alias("pw"),
+    ).union(e.select("dst", F.lit(0), zero_d, isv, F.lit(0.0)))
+    if vertices is not None:
+        ends = ends.union(
+            vertices.select("id", F.lit(0), zero_d, F.lit(True), F.lit(0.0))
         )
-    verts = vertices.select("id").cache()
-    n = verts.count()
-    if n == 0:
-        return PageRankRun(
-            verts.withColumn("rank", F.lit(0.0)), 0, [], 0.0, True
-        )
+    if pers is not None:
+        ends = ends.union(pers.select(
+            "id", F.lit(0), zero_d, F.lit(False), F.col("weight").cast("double")
+        ))
+    dangling = ~F.coalesce(F.col("deg") > 0, F.lit(False))
 
     # Partition count scales with graph size (at 10^12 edges the caller sets
-    # it explicitly; small graphs shouldn't pay 100-task supersteps). All
-    # superstep shuffles use P so state/contribs/base stay co-partitioned on
-    # the vertex id and the per-superstep joins are shuffle-free — the only
-    # shuffle each superstep is the contribution gather (groupBy id).
-    # P follows EDGES as well as vertices: the gather join and the
+    # it explicitly; small graphs shouldn't pay 100-task supersteps). P
+    # follows EDGES as well as vertices: the gather join and the
     # contribution shuffle move one row per edge, so a dense graph (sf0.1
     # bipartite: 16k vertices / 587k edges) was running P=4 supersteps on
     # a 32-core host. Interleaved min-of-3 on that graph: P=4 8.78 s,
-    # P=8 8.41 s, edge-derived auto P=9 8.57 s (includes the m-count's
-    # ~0.15 s), P=32 WORSE at 12.7 s — per-task overhead dominates at
-    # this size, so the cap stays. The m-count is one extra pass over the
-    # input; callers at real scale pass num_partitions and skip it.
-    default_P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if num_partitions:
-        P = num_partitions
-    else:
-        m = e.count()
-        P = max(4, min(default_P, max(n // 50_000, m // 100_000) + 4))
-    saved_conf = {
-        "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-        # AQE coalescing would change shuffle partition counts mid-loop and
-        # defeat co-partitioning reuse across supersteps
-        "spark.sql.adaptive.coalescePartitions.enabled": spark.conf.get(
-            "spark.sql.adaptive.coalescePartitions.enabled"
-        ),
-    }
-    spark.conf.set("spark.sql.shuffle.partitions", str(P))
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-
-    if weight_col is not None:
-        # stochastic normalization over out-WEIGHT sums; an all-zero
-        # out-weight vertex drops out of outdeg and is dangling (see doc)
-        outdeg = (
-            e.groupBy("src").agg(F.sum("w").alias("deg")).where(F.col("deg") > 0)
+    # P=8 8.41 s, edge-derived auto P=9 8.57 s, P=32 WORSE at 12.7 s —
+    # per-task overhead dominates at this size, so the cap stays. n and m
+    # are observed by the set-up aggregation, which runs at the session's
+    # partition count; base is re-partitioned only when P differs.
+    P0 = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with pinned_plan(spark, P0):
+        setup = Observation(f"pr_setup_{run_id}")
+        vdeg = (
+            ends.groupBy("id")
+            .agg(
+                F.sum("d").alias("deg"),
+                F.sum("k").alias("k"),
+                F.max("v").alias("v"),
+                F.sum("pw").alias("pw"),
+            )
+            .observe(
+                setup,
+                F.count_if("v").alias("n"),
+                F.count_if(F.col("v") & dangling).alias("n_dangling"),
+                F.sum("k").alias("m"),
+                F.sum(F.when(F.col("v"), F.col("pw"))).alias("ptot"),
+            )
         )
-    else:
-        outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    # renamed e_* columns: the superstep state's lineage contains this
-    # frame, so later joins against it are self-joins — name-based
-    # resolution on unique names sidesteps attribute-id ambiguity
-    ecols = [
-        F.col("src").alias("e_src"),
-        F.col("dst").alias("e_dst"),
-        F.col("deg").cast("double").alias("e_deg"),
-    ] + ([F.col("w").alias("e_w")] if weight_col is not None else [])
-    edges_deg = (
-        e.join(outdeg, "src").select(*ecols).repartition(P, "e_src").persist()
-    )
-    edges_deg.count()  # materialize once; cached stats are then accurate
-
-    # personalization vector (restricted to vertices, renormalized)
-    if pers is not None:
-        pv = verts.join(pers.select("id", "weight"), "id", "left").select(
-            "id", F.coalesce(F.col("weight"), F.lit(0.0)).alias("w")
+        if vertices is not None or pers is not None:
+            vdeg = vdeg.where("v")
+        vdeg = vdeg.select("id", "deg", "pw").localCheckpoint(eager=True)
+        stats = setup.get
+        n = int(stats["n"])
+        if n == 0:
+            return PageRankRun(
+                vdeg.select("id", F.lit(0.0).alias("rank")), 0, [], 0.0, True
+            )
+        P = num_partitions or max(
+            4, min(P0, max(n // 50_000, int(stats["m"]) // 100_000) + 4)
         )
-        tot = pv.agg(F.sum("w")).first()[0] or 0.0
-        if tot > 0:
-            pvec = pv.select("id", (F.col("w") / F.lit(float(tot))).alias("p"))
-        else:
-            pvec = verts.select("id", F.lit(1.0 / n).alias("p"))
-    else:
-        pvec = verts.select("id", F.lit(1.0 / n).alias("p"))
 
-    base = (
-        pvec.join(outdeg.select(F.col("src").alias("id"), "deg"), "id", "left")
-        .select("id", "p", F.col("deg").isNull().alias("dangling"))
-        .repartition(P, "id")
-        .persist()
-    )
-    base.count()
+        # personalization vector (restricted to vertices, renormalized)
+        ptot = float(stats["ptot"] or 0.0)
+        p = F.col("pw") / F.lit(ptot) if ptot > 0 else F.lit(1.0 / n)
+        base = vdeg.select("id", p.alias("p"), dangling.alias("dangling"), "deg")
+        if P != P0:
+            spark.conf.set("spark.sql.shuffle.partitions", str(P))
+            base = base.repartition(P, "id")
 
-    # Superstep state management (measured, not guessed — see git history):
-    # each step eager-localCheckpoints the new state (constant logical-plan
-    # depth), BUT Spark's local checkpoint keeps the full RDD lineage as its
-    # recovery path — if the driver GC drops an old step's DataFrame, the
-    # ContextCleaner evicts its blocks and every later step silently
-    # recomputes a doubly-referenced chain (wall time doubles per step).
-    # So (a) strong references to every checkpointed state are held in
-    # `kept` between resets, and (b) every checkpoint_interval steps the
-    # state is round-tripped through parquet, which genuinely truncates
-    # lineage and lets the old blocks be freed. Non-durable runs round-trip
-    # through a tempdir; durable runs additionally write the per-partition
-    # lineage table + _DONE markers for resume.
-    durable = checkpoint_dir is not None
-    if not durable:
-        # RAM-backed tempdir when available: the non-durable round-trip is
-        # only a lineage truncation point, it doesn't need to survive
-        tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        checkpoint_dir = tempfile.mkdtemp(prefix="deeprank_pr_", dir=tmp_parent)
-    ckpt_base = os.path.join(checkpoint_dir, run_id)
-    os.makedirs(ckpt_base, exist_ok=True)
-    start_step = 0
-    state = None
-    if resume and durable:
-        done = _completed_supersteps(ckpt_base)
+        # The second set-up job. A local checkpoint, not a cache: the state
+        # shares `base`'s attributes, so a join of the two plans is a
+        # self-join whose de-duplication re-instances the right side — a
+        # cached plan then no longer matches and every superstep would
+        # recompute the edge join. A checkpoint is a leaf with its own
+        # (renamed e_*) attributes; it keeps the hash partitioning and the
+        # src sort order of the join that built it.
+        edges_deg = (
+            e.join(base.where(~F.col("dangling")).select(F.col("id").alias("src"), "deg"), "src")
+            .select(
+                F.col("src").alias("e_src"),
+                F.col("dst").alias("e_dst"),
+                F.col("deg").cast("double").alias("e_deg"),
+                *([F.col("w").alias("e_w")] if weighted else []),
+            )
+            .localCheckpoint(eager=True)
+        )
+
+        def with_base(ranks: DataFrame) -> DataFrame:
+            return ranks.repartition(P, "id").join(
+                base.select("id", "p", "dangling"), "id"
+            )
+
+        # Superstep state management (measured, not guessed — see git history):
+        # each step eager-localCheckpoints the new state (constant logical-plan
+        # depth), BUT Spark's local checkpoint keeps the full RDD lineage as its
+        # recovery path — if the driver GC drops an old step's DataFrame, the
+        # ContextCleaner evicts its blocks and every later step silently
+        # recomputes a doubly-referenced chain (wall time doubles per step).
+        # So (a) strong references to every checkpointed state are held in
+        # `kept` between resets, and (b) every checkpoint_interval steps the
+        # state is round-tripped through parquet, which genuinely truncates
+        # lineage and lets the old blocks be freed. Non-durable runs round-trip
+        # through a tempdir; durable runs additionally write the per-partition
+        # lineage table + _DONE markers for resume.
+        durable = checkpoint_dir is not None
+        if not durable:
+            # RAM-backed tempdir when available: the non-durable round-trip is
+            # only a lineage truncation point, it doesn't need to survive
+            tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
+            checkpoint_dir = tempfile.mkdtemp(prefix="deeprank_pr_", dir=tmp_parent)
+        ckpt_base = os.path.join(checkpoint_dir, run_id)
+        os.makedirs(ckpt_base, exist_ok=True)
+        start_step = 0
+        state = None
+        done = completed_supersteps(ckpt_base) if resume and durable else []
         if done:
             start_step = max(done)
-            state = spark.read.parquet(
+            rank_schema = StructType(
+                [vdeg.schema["id"], StructField("rank", DoubleType())]
+            )
+            state = with_base(spark.read.schema(rank_schema).parquet(
                 os.path.join(ckpt_base, f"superstep={start_step}")
-            ).repartition(P, "id")
+            ))
+            dm = read_marker(ckpt_base, start_step).get("dangling_mass")
+            if dm is None:  # a marker written before it carried the mass
+                dm = state.where("dangling").agg(F.sum("rank")).first()[0] or 0.0
+        else:
+            state = base.select("id", F.lit(1.0 / n).alias("rank"), "p", "dangling")
+            dm = int(stats["n_dangling"]) / n  # every vertex starts at 1/n
 
-    if state is None:
-        state = base.select("id", F.lit(1.0 / n).alias("rank"))
-
-    # dangling mass of the current state
-    dm = (
-        state.join(base.where("dangling").select("id"), "id")
-        .agg(F.sum("rank"))
-        .first()[0]
-        or 0.0
-    )
-
-    deltas = []
-    converged = False
-    step = start_step
-    kept = []  # strong refs: keep checkpoint blocks alive between resets
-    prev_ckpt = None  # non-durable: last superstep dir kept on tmpfs
-    try:
+        if weighted:
+            contrib = F.col("rank") * F.col("e_w") / F.col("e_deg")
+        else:
+            contrib = F.col("rank") / F.col("e_deg")
+        err_metric = F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("err")
+        dm_metric = F.sum(
+            F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)
+        ).alias("dm")
+        deltas = []
+        converged = False
+        step = start_step
+        kept = []  # strong refs: keep checkpoint blocks alive between resets
+        prev_ckpt = None  # non-durable: last superstep dir kept on tmpfs
         while step < max_iter:
             step += 1
             it0 = time.time()
-            joined = state.select(
-                F.col("id").alias("sid"), "rank"
-            ).join(edges_deg, F.col("sid") == F.col("e_src"))
-            cexpr = (
-                F.col("rank") * F.col("e_w") / F.col("e_deg")
-                if weight_col is not None
-                else F.col("rank") / F.col("e_deg")
-            )
-            contribs = joined.select(
-                F.col("e_dst").alias("id"),
-                F.col("e_src").alias("esrc"),
-                cexpr.alias("c"),
-            )
+            gathered = state.join(edges_deg, F.col("id") == F.col("e_src"))
+            c = contrib
             if salt_buckets > 1:
-                # explicit two-phase aggregation: pre-aggregate hub fan-in on
-                # (dst, hash(src) % B) before the final per-dst combine, so a
-                # power-law hub's contributions spread over B reducers.
-                contribs = (
-                    contribs.withColumn(
-                        "salt", F.pmod(F.xxhash64("esrc"), F.lit(salt_buckets))
-                    )
-                    .groupBy("id", "salt")
-                    .agg(F.sum("c").alias("c"))
-                )
-            summed = contribs.groupBy("id").agg(F.sum("c").alias("c"))
-
-            # convergence metrics ride the checkpoint job itself
-            # (CollectMetrics above the select, harvested by the eager
-            # materialization) — one driver action per superstep, not two
+                # explicit two-phase aggregation: pre-aggregate hub fan-in
+                # on (dst, hash(src) % B) before the final per-dst combine,
+                # so a power-law hub's contributions spread over B reducers.
+                gathered = gathered.groupBy(
+                    "e_dst",
+                    F.pmod(F.xxhash64("e_src"), F.lit(salt_buckets)).alias("salt"),
+                ).agg(F.sum(c).alias("c"))
+                c = F.col("c")
+            summed = gathered.groupBy(F.col("e_dst").alias("id")).agg(
+                F.sum(c).alias("c")
+            )
             obs = Observation(f"pr_step_{run_id}_{step}")
-            new_state = (
-                base.join(summed, "id", "left")
-                .join(state.select("id", F.col("rank").alias("prev")), "id")
+            state = (
+                state.join(summed, "id", "left")
                 .select(
                     "id",
                     (
@@ -515,37 +526,33 @@ def pagerank_distributed(
                         * (F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(float(dm)) * F.col("p"))
                         + F.lit(1.0 - alpha) * F.col("p")
                     ).alias("rank"),
-                    F.col("prev"),
-                    F.col("dangling"),
+                    "p",
+                    "dangling",
+                    F.col("rank").alias("prev"),
                 )
-                .observe(
-                    obs,
-                    F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("err"),
-                    F.sum(
-                        F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)
-                    ).alias("dm"),
-                )
+                .observe(obs, err_metric, dm_metric)
                 # EAGER local checkpoint: truncates logical plan AND rdd
-                # lineage at materialization (Spark 4 LogicalRDD stats
-                # don't compound, so no parquet round-trip needed). Eager
-                # matters: a lazy localCheckpoint materialized through a
-                # downstream action does NOT truncate lineage, so when the
-                # driver GC drops old step DataFrames their blocks vanish
-                # and later steps cascade-recompute from scratch.
+                # lineage at materialization, and the one job of the
+                # superstep. Eager matters: a lazy localCheckpoint
+                # materialized through a downstream action does NOT
+                # truncate lineage, so when the driver GC drops old step
+                # DataFrames their blocks vanish and later steps
+                # cascade-recompute from scratch.
                 .localCheckpoint(eager=True)
             )
             row = obs.get
             err, dm = float(row["err"]), float(row["dm"] or 0.0)
-            kept.append(new_state)
-            state = new_state.select("id", "rank")
+            kept.append(state)
             wall_ms = (time.time() - it0) * 1000.0
             deltas.append({"superstep": step, "l1_delta": err, "wall_ms": wall_ms})
             if verbose:
                 print(f"[pagerank] step={step} l1={err:.3e} wall_ms={wall_ms:.0f}", flush=True)
+            converged = tol > 0 and err < n * tol
 
-            if step % checkpoint_interval == 0 or (tol > 0 and err < n * tol):
-                state = _write_superstep(
-                    state, ckpt_base, step, wall_ms, P, durable=durable
+            if step % checkpoint_interval == 0 or converged:
+                ranks = _write_superstep(
+                    state.select("id", "rank"), ckpt_base, step, wall_ms, dm,
+                    durable=durable,
                 )
                 kept.clear()  # parquet re-read is lineage-free: old blocks can go
                 if not durable:
@@ -555,15 +562,10 @@ def pagerank_distributed(
                     if prev_ckpt is not None:
                         shutil.rmtree(prev_ckpt, ignore_errors=True)
                     prev_ckpt = os.path.join(ckpt_base, f"superstep={step}")
-            if tol > 0 and err < n * tol:
-                converged = True
-                break
-    finally:
-        for k, v in saved_conf.items():
-            spark.conf.set(k, v)
-        edges_deg.unpersist()
-        base.unpersist()
-        verts.unpersist()
+                if converged:
+                    state = ranks
+                    break
+                state = with_base(ranks)
 
     if tol <= 0:
         # fixed-iteration mode: exactly max_iter supersteps, deterministic
@@ -573,63 +575,52 @@ def pagerank_distributed(
         if not durable:
             shutil.rmtree(checkpoint_dir, ignore_errors=True)
         raise RuntimeError(f"pagerank_distributed: no convergence in {max_iter} supersteps")
+    ranks = state.select("id", "rank")
     if not durable:
         # pin the final state into block storage; the last superstep dir
         # stays on tmpfs until interpreter exit (atexit) because it is the
         # checkpoint's lineage recovery path — deleting it eagerly would
         # make run.ranks unrecoverable after executor block loss. Earlier
         # superstep dirs were already deleted incrementally in the loop.
-        state = state.localCheckpoint(eager=True)
+        ranks = ranks.localCheckpoint(eager=True)
         atexit.register(shutil.rmtree, checkpoint_dir, ignore_errors=True)
-    return PageRankRun(state, step, deltas, time.time() - t0, converged)
+    return PageRankRun(ranks, step, deltas, time.time() - t0, converged)
 
 
 def _write_superstep(
-    state: DataFrame,
+    ranks: DataFrame,
     ckpt_base: str,
     step: int,
     wall_ms: float,
-    num_partitions: int,
+    dangling_mass: float,
     durable: bool,
 ) -> DataFrame:
-    """Parquet round-trip: the real lineage truncation point. Durable runs
-    also append the per-partition lineage table and a _DONE marker (resume
-    scans the markers). Durable state lands SORTED on id within each
-    (hash) partition file, so row-group min/max stats let a point lookup
-    of one vertex's rank at a checkpointed superstep prune to ~one row
-    group per file. Deliberately NOT repartitionByRange: the range
-    partitioner samples boundaries with an RDD-id-seeded RNG, so its
-    layout varies between runs of identical data and demotes the
-    cross-run bitwise-resume guarantee to ~1e-18 float wiggle (measured);
-    hash partitioning + in-file sort is fully value-determined."""
+    """Parquet round-trip of (id, rank): the real lineage truncation point.
+    Durable runs also append the per-partition lineage table and a _DONE
+    marker carrying the state's dangling mass (resume scans the markers).
+    Durable state lands SORTED on id within each (hash) partition file, so
+    row-group min/max stats let a point lookup of one vertex's rank at a
+    checkpointed superstep prune to ~one row group per file. Deliberately
+    NOT repartitionByRange: the range partitioner samples boundaries with
+    an RDD-id-seeded RNG, so its layout varies between runs of identical
+    data and demotes the cross-run bitwise-resume guarantee to ~1e-18
+    float wiggle (measured); hash partitioning + in-file sort is fully
+    value-determined."""
     path = os.path.join(ckpt_base, f"superstep={step}")
     if durable:
-        state.sortWithinPartitions("id").write.mode("overwrite").parquet(path)
-    else:
-        # non-durable resets are pure lineage truncation on tmpfs: skip
-        # the sort, nothing ever point-reads these
-        state.write.mode("overwrite").parquet(path)
-    if durable:
-        _lineage_rows(state, step, wall_ms).write.mode("append").parquet(
+        ranks.sortWithinPartitions("id").write.mode("overwrite").parquet(path)
+        _lineage_rows(ranks, step, wall_ms).write.mode("append").parquet(
             os.path.join(ckpt_base, "lineage")
         )
-        with open(os.path.join(ckpt_base, f"_DONE_{step}"), "w") as f:
-            json.dump({"superstep": step, "wall_ms": wall_ms}, f)
-    return state.sparkSession.read.parquet(path).repartition(
-        num_partitions, "id"
-    )
-
-
-def _completed_supersteps(ckpt_base: str) -> list:
-    """Local-FS marker scan; on a cluster this would go through the Hadoop
-    FileSystem API — the marker protocol is identical."""
-    out = []
-    if not os.path.isdir(ckpt_base):
-        return out
-    for name in os.listdir(ckpt_base):
-        if name.startswith("_DONE_"):
-            out.append(int(name.split("_DONE_")[1]))
-    return sorted(out)
+        write_marker(ckpt_base, step, {
+            "superstep": step, "wall_ms": wall_ms, "dangling_mass": dangling_mass,
+        })
+    else:
+        # non-durable resets are pure lineage truncation on tmpfs: nothing
+        # ever point-reads these
+        ranks.write.mode("overwrite").parquet(path)
+    # the schema is known: reading without it runs a schema-inference job
+    return ranks.sparkSession.read.schema(ranks.schema).parquet(path)
 
 
 def read_lineage(spark: SparkSession, checkpoint_dir: str, run_id: str) -> DataFrame:

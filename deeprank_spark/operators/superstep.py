@@ -1,17 +1,19 @@
-"""Durable superstep checkpoint protocol for the distributed label kernels.
+"""Durable superstep checkpoint protocol and the plan pin of the superstep
+kernels.
 
 The north rule requires checkpointed rank/LABEL state per superstep with a
 per-partition lineage table and iteration metrics, resumable mid-run.
-pagerank.py carries that machinery for rank state (pagerank.py:550,
-_write_superstep / _completed_supersteps / read_lineage); this module is the
-same on-disk protocol factored for the label kernels (connected components,
-label propagation), so one external auditor can read any kernel's run
-directory the same way:
+pagerank.py writes its rank state itself (_write_superstep, with its own
+lineage hashing) but publishes and scans the markers through the helpers
+here; SuperstepCheckpointer is the whole protocol for the other kernels
+(components, label propagation, HITS, eigenvector, SCC, paths), so one
+external auditor can read any kernel's run directory the same way:
 
     <checkpoint_dir>/<run_id>/superstep=<k>/   parquet state at round k
     <checkpoint_dir>/<run_id>/lineage/         (superstep, partition_id,
                                                 rows, checksum, wall_ms)
-    <checkpoint_dir>/<run_id>/_DONE_<k>        json marker: round complete
+    <checkpoint_dir>/<run_id>/_DONE_<k>        json marker: round complete,
+                                                published atomically
 
 Resume scans the _DONE markers (local FS here; the Hadoop FileSystem API on
 a cluster — the marker protocol is identical), re-reads the newest complete
@@ -25,9 +27,76 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# Session settings a superstep loop fixes for its whole call. With AQE on,
+# every query stage is submitted as its own job, a checkpointed state scans
+# as UnknownPartitioning (so each join on it re-shuffles the state) and
+# coalescing changes partition counts between supersteps; under the
+# broadcast threshold a cached edge table is re-broadcast every superstep.
+# Pinned, the state keeps hashpartitioning(id, P) through localCheckpoint
+# and every join against it, or against an edge table partitioned on the
+# same key, is an exchange-free sort-merge join: one fixed plan per
+# superstep instead of a re-plan per query stage.
+_PLAN_PINS = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
+
+
+@contextmanager
+def pinned_plan(spark: SparkSession, partitions: int):
+    """Pin the plan settings above and spark.sql.shuffle.partitions=P for
+    the block; every one of them (shuffle partitions too, if the block
+    changes it) is restored on exit, raised or not.
+
+    NOT re-entrant on a shared SparkSession: a concurrent query on the
+    SAME session runs under these settings. Kernel jobs own their session
+    (spark-submit per job); give concurrent interactive work its own
+    session or serialize kernel calls."""
+    pins = {**_PLAN_PINS, "spark.sql.shuffle.partitions": str(partitions)}
+    saved = {k: spark.conf.get(k) for k in pins}
+    try:
+        for k, v in pins.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def completed_supersteps(base: str) -> list:
+    """Steps with a _DONE_<k> marker under a run dir, ascending. Local-FS
+    scan; on a cluster this goes through the Hadoop FileSystem API — the
+    marker protocol is identical."""
+    if not os.path.isdir(base):
+        return []
+    return sorted(
+        int(name[len("_DONE_"):])
+        for name in os.listdir(base)
+        if name.startswith("_DONE_")
+    )
+
+
+def read_marker(base: str, step: int) -> dict:
+    with open(os.path.join(base, f"_DONE_{step}")) as f:
+        return json.load(f)
+
+
+def write_marker(base: str, step: int, meta: dict) -> None:
+    """Atomic _DONE_<k>: the json goes to a temp name first, then
+    os.replace publishes it, so a crash mid-write leaves no torn marker,
+    only a stray temp file. The temp name must not start with "_DONE_":
+    resume and tools/lineage_audit.py parse that prefix's suffix as a
+    step number."""
+    tmp = os.path.join(base, f"_tmp_DONE_{step}")
+    with open(tmp, "w") as f:
+        json.dump(meta, f)
+    os.replace(tmp, os.path.join(base, f"_DONE_{step}"))
 
 
 class KernelRun:
@@ -57,13 +126,7 @@ class SuperstepCheckpointer:
         os.makedirs(self.base, exist_ok=True)
 
     def completed(self) -> list:
-        out = []
-        if not os.path.isdir(self.base):
-            return out
-        for name in os.listdir(self.base):
-            if name.startswith("_DONE_"):
-                out.append(int(name.split("_DONE_")[1]))
-        return sorted(out)
+        return completed_supersteps(self.base)
 
     def resume(self, spark: SparkSession):
         """(state, rounds_done, converged) from the newest complete round,
@@ -72,8 +135,7 @@ class SuperstepCheckpointer:
         if not done:
             return None, 0, False
         step = max(done)
-        with open(os.path.join(self.base, f"_DONE_{step}")) as f:
-            meta = json.load(f)
+        meta = read_marker(self.base, step)
         state = spark.read.parquet(os.path.join(self.base, f"superstep={step}"))
         return state, step, bool(meta.get("converged", False))
 
@@ -100,16 +162,12 @@ class SuperstepCheckpointer:
         self._lineage_rows(state, step, wall_ms).write.mode("append").parquet(
             os.path.join(self.base, "lineage")
         )
-        with open(os.path.join(self.base, f"_DONE_{step}"), "w") as f:
-            json.dump(
-                {
-                    "superstep": step,
-                    "wall_ms": wall_ms,
-                    "changed": int(changed),
-                    "converged": bool(converged),
-                },
-                f,
-            )
+        write_marker(self.base, step, {
+            "superstep": step,
+            "wall_ms": wall_ms,
+            "changed": int(changed),
+            "converged": bool(converged),
+        })
         return state.sparkSession.read.parquet(path)
 
     def write_sections(self, sections: dict, step: int, wall_ms: float,
@@ -145,8 +203,7 @@ class SuperstepCheckpointer:
         }
         if extra_meta:
             meta.update(extra_meta)
-        with open(os.path.join(self.base, f"_DONE_{step}"), "w") as f:
-            json.dump(meta, f)
+        write_marker(self.base, step, meta)
         return out
 
     def resume_sections(self, spark: SparkSession):
@@ -156,8 +213,7 @@ class SuperstepCheckpointer:
         if not done:
             return None, 0, False, {}
         step = max(done)
-        with open(os.path.join(self.base, f"_DONE_{step}")) as f:
-            meta = json.load(f)
+        meta = read_marker(self.base, step)
         secs = {
             name: spark.read.parquet(
                 os.path.join(self.base, f"superstep={step}", name)

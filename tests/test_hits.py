@@ -151,6 +151,23 @@ def test_hits_per_conv_matches_networkx(spark):
             assert math.isclose(ga, na[node], rel_tol=0, abs_tol=1e-8), (conv, node)
 
 
+def test_hits_per_conv_nonconvergence_raises(spark):
+    # like nx and hits_distributed: tol > 0 and max_iter spent raises;
+    # tol = 0 runs exactly max_iter iterations and returns
+    from pyspark.errors import PythonException
+
+    from deeprank_spark.operators.hits import hits_per_conv
+
+    pairs = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")]
+    g = spark.createDataFrame(
+        [("c1", "W", s, "W", d) for s, d in pairs],
+        "conv_id string, src_kind string, src string, dst_kind string, dst string",
+    )
+    with pytest.raises(PythonException, match="no convergence"):
+        hits_per_conv(g, max_iter=1, tol=1e-15).collect()
+    assert len(hits_per_conv(g, max_iter=1, tol=0).collect()) == 4
+
+
 def _eig_nx(edges, tol=1e-6, max_iter=200):
     import networkx as nx
 

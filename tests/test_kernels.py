@@ -549,14 +549,17 @@ def test_negative_edge_samples(spark):
     got = {(r["src"], r["dst"], r["slot"]) for r in rows}
     verts = sorted({x for ed in edges for x in ed})
     eset = set(edges)
-    exp = set()
+    first_slot = {}  # (u, v) -> the lowest slot that picked it
     for u in verts:
         for slot in range(4):
             h = int(hashlib.md5(f"t|{u}|{slot}".encode()).hexdigest()[:8], 16)
             v = verts[h % len(verts)]
             if v != u and (u, v) not in eset:
-                exp.add((u, v, slot))
+                first_slot.setdefault((u, v), slot)
+    exp = {(u, v, slot) for (u, v), slot in first_slot.items()}
     assert got == exp
+    # one row per pair
+    assert len(rows) == len({(r["src"], r["dst"]) for r in rows})
     for (u, v, _) in got:
         assert (u, v) not in eset and u != v
 

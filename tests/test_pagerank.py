@@ -1,6 +1,7 @@
 """PageRank kernels vs networkx oracle — the north-rule allclose 1e-6 gate."""
 
 import math
+import os
 import random
 
 import pytest
@@ -211,3 +212,42 @@ def test_distributed_weighted_zero_outweight_is_dangling(spark):
     exp = pagerank_weighted_nx(wedges)  # 4 dangling: no out-edge at all
     for k, v in exp.items():
         assert math.isclose(got[k], v, abs_tol=ATOL)
+
+
+_PLAN_CONF = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.adaptive.coalescePartitions.enabled",
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.shuffle.partitions",
+)
+
+
+def test_distributed_one_job_per_superstep_and_conf_restored(tmp_path, spark):
+    # Each superstep is ONE Spark job (the eager state checkpoint); set-up
+    # is two (the vertex/out-degree aggregation and edges_deg) and every
+    # durable write two more (state parquet, lineage rows). The kernel
+    # pins the plan settings for its call and must restore them, also
+    # when it raises.
+    sc = spark.sparkContext
+    before = {k: spark.conf.get(k) for k in _PLAN_CONF}
+    e = spark.createDataFrame(_random_graph(31), "src long, dst long")
+    ck = str(tmp_path / "ck")
+    sc.setJobGroup("pr-job-count", "pagerank_distributed job count")
+    try:
+        run = pagerank_distributed(
+            e, checkpoint_dir=ck, run_id="pr", checkpoint_interval=4,
+            num_partitions=4,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("pr-job-count"))
+    writes = len([n for n in os.listdir(os.path.join(ck, "pr"))
+                  if n.startswith("_DONE_")])
+    assert run.converged and run.supersteps > 4 and writes >= 2
+    assert run.supersteps <= jobs <= run.supersteps + 2 + 2 * writes, (
+        jobs, run.supersteps, writes)
+    assert {k: spark.conf.get(k) for k in _PLAN_CONF} == before
+
+    with pytest.raises(RuntimeError, match="no convergence"):
+        pagerank_distributed(e, max_iter=2, num_partitions=4)
+    assert {k: spark.conf.get(k) for k in _PLAN_CONF} == before

@@ -27,15 +27,16 @@ Scale design (same shape as pagerank_distributed): TWO cached copies of
 the edge list, hash-partitioned on src and on dst respectively, so both
 gathers of every superstep join co-partitioned; both aggregations get
 Spark's partial (map-side) combine plus optional explicit (key, salt)
-two-phase aggregation for power-law hubs. Each superstep materializes
-the RAW gather sums once (eager localCheckpoint) with both
-max-normalizers riding that job as observed metrics — computing them as
-separate scalar aggregates would replay the gather joins several times —
-and the normalized state is a lazy map-only projection of the
-checkpointed frame. Fixed-iteration mode (tol=0) is ONE driver action
-per superstep; convergence mode adds one shuffle-free scan of the
-materialized blocks for the L1 error. Durable checkpoints, lineage and
-bitwise resume via the shared superstep protocol
+two-phase aggregation for power-law hubs. A superstep carries hub only:
+the a-gather feeds just the h-gather, so the plan is one chain of two
+gather exchanges, and the RAW h sums land in one eager localCheckpoint
+with the max-normalizer riding that job as an observed metric. auth is
+the a-gather of the previous hub, recomputed only where it is read (a
+durable write, the end). The normalized state is a lazy map-only
+projection of the checkpointed frame. Fixed-iteration mode (tol=0) is
+ONE driver action per superstep; convergence mode adds one shuffle-free
+scan of the materialized blocks for the L1 error. Durable checkpoints,
+lineage and bitwise resume via the shared superstep protocol
 (operators/superstep.py), like every other iterative kernel here.
 """
 
@@ -152,47 +153,74 @@ def hits_distributed(
                     "id", F.lit(1.0 / n).alias("hub"), F.lit(0.0).alias("auth")
                 ).localCheckpoint(eager=True)
 
-            kept = [state]
-            rdir = _ResetDir("hits")
-            last_written = step if durable and resume else -1
-            while not converged and step < max_iter:
-                it0 = time.time()
-                araw = (
-                    state.select(F.col("id").alias("hid"), "hub")
+            def a_gather(frame: DataFrame) -> DataFrame:
+                """(id, av): a_raw(v) = sum_{u->v} hub(u), one exchange."""
+                c = (
+                    frame.select(F.col("id").alias("hid"), "hub")
                     .join(e_by_src, F.col("hid") == F.col("es"))
                     .select(F.col("ed").alias("id"), F.col("hub").alias("c"), F.col("es").alias("okey"))
                 )
                 if salt_buckets > 1:
-                    araw = (
-                        araw.withColumn(
+                    c = (
+                        c.withColumn(
                             "salt", F.pmod(F.xxhash64("okey"), F.lit(salt_buckets))
                         )
                         .groupBy("id", "salt")
                         .agg(F.sum("c").alias("c"))
                     )
-                araw = araw.groupBy("id").agg(F.sum("c").alias("av"))
-                # the h-gather groups on the SOURCE id: its fan-in per key is
+                return c.groupBy("id").agg(F.sum("c").alias("av"))
+
+            def with_auth(hubs: DataFrame, prev: DataFrame) -> DataFrame:
+                """(id, hub, auth) for a state whose auth is the a-gather of
+                `prev`'s hub, max-normalized: one more gather job, paid at a
+                durable write and at the end, never per superstep."""
+                obs = Observation(f"hits_auth_{run_id}_{step}")
+                ja = (
+                    hubs.join(a_gather(prev), "id", "left")
+                    .select("id", "hub", F.coalesce(F.col("av"), F.lit(0.0)).alias("av"))
+                    .observe(obs, F.max(F.col("av")).alias("amax"))
+                    .localCheckpoint(eager=True)
+                )
+                kept.append(ja)
+                amax = float(obs.get["amax"])
+                return ja.select("id", "hub", (F.col("av") / F.lit(amax)).alias("auth"))
+
+            kept = [state]
+            rdir = _ResetDir("hits")
+            last_written = step if durable and resume else -1
+            # the state the current hubs were gathered from; None while the
+            # state still carries its own auth column (initial or resumed)
+            auth_from = None
+            while not converged and step < max_iter:
+                it0 = time.time()
+                # The superstep carries hub only. a_raw feeds just the
+                # h-gather (h uses the UNnormalized a, the nx detail), so the
+                # plan is one chain of two gathers. Producing auth in the same
+                # job would use a_raw twice, and Spark plans (and runs) the
+                # a-gather exchange once per use. auth_k is the a-gather of
+                # hub_{k-1}, so with_auth recomputes it only when it is read.
+                # The h-gather groups on the SOURCE id: its fan-in per key is
                 # that source's out-degree, which degree-capped link graphs
                 # bound; the in-degree hub skew salting targets lives in the
-                # a-gather above, so only that one pays the two-phase pass
+                # a-gather, so only that one pays the two-phase pass
                 # (measured: salting both made the salted variant strictly
                 # slower on an in-hub graph — the second pass bought nothing)
                 hraw = (
-                    araw.select(F.col("id").alias("aid"), "av")
+                    a_gather(state)
+                    .select(F.col("id").alias("aid"), "av")
                     .join(e_by_dst, F.col("aid") == F.col("fd"))
                     .select(F.col("fs").alias("id"), F.col("av").alias("c"))
                     .groupBy("id")
                     .agg(F.sum("c").alias("hv"))
                 )
-                # ONE materialization per superstep: the raw gather sums land
-                # in an eager checkpoint with the max-normalizers riding it as
-                # observed metrics (computing them as separate scalar
-                # aggregates would replay both gather joins — the araw subtree
-                # ~4x). The normalized state is then a lazy map-only SELECT
-                # over the checkpointed frame; the L1 error is a second scan
-                # of the SAME materialized blocks (no shuffle, no recompute).
+                # ONE materialization per superstep: the raw h sums land in
+                # an eager checkpoint with the max-normalizer riding it as an
+                # observed metric (a separate scalar aggregate would replay
+                # both gathers). The normalized state is a lazy map-only
+                # SELECT over the checkpointed frame; the L1 error is a second
+                # scan of the SAME materialized blocks (no shuffle).
                 obs = Observation(f"hits_step_{run_id}_{step + 1}")
-                joined = base.join(araw, "id", "left").join(hraw, "id", "left")
+                joined = base.join(hraw, "id", "left")
                 if tol > 0:
                     # the L1 stop criterion needs last round's hub alongside
                     # this round's raw sums; fixed-iteration mode skips both
@@ -202,23 +230,17 @@ def hits_distributed(
                     )
                 cols = [
                     F.col("id"),
-                    F.coalesce(F.col("av"), F.lit(0.0)).alias("av"),
                     F.coalesce(F.col("hv"), F.lit(0.0)).alias("hv"),
                 ] + ([F.col("prev_hub")] if tol > 0 else [])
-                ah = (
+                hs = (
                     joined.select(*cols)
-                    .observe(
-                        obs,
-                        F.max(F.col("av")).alias("amax"),
-                        F.max(F.col("hv")).alias("hmax"),
-                    )
+                    .observe(obs, F.max(F.col("hv")).alias("hmax"))
                     .localCheckpoint(eager=True)
                 )
-                row = obs.get
-                amax, hmax = float(row["amax"]), float(row["hmax"])
+                hmax = float(obs.get["hmax"])
                 if tol > 0:
                     err = float(
-                        ah.agg(
+                        hs.agg(
                             F.sum(
                                 F.abs(F.col("hv") / F.lit(hmax) - F.col("prev_hub"))
                             )
@@ -228,12 +250,9 @@ def hits_distributed(
                     # fixed-iteration mode never reads the error: don't pay a
                     # second scan per superstep just to log it
                     err = -1.0
-                kept.append(ah)
-                state = ah.select(
-                    "id",
-                    (F.col("hv") / F.lit(hmax)).alias("hub"),
-                    (F.col("av") / F.lit(amax)).alias("auth"),
-                )
+                kept.append(hs)
+                auth_from = state.select("id", "hub")
+                state = hs.select("id", (F.col("hv") / F.lit(hmax)).alias("hub"))
                 step += 1
                 wall_ms = (time.time() - it0) * 1000.0
                 converged = tol > 0 and err < tol
@@ -242,13 +261,16 @@ def hits_distributed(
                     # the protocol's `changed` slot (an int) carries the L1
                     # delta scaled to nano-resolution — a monotone convergence
                     # signal an auditor can read off the _DONE markers
-                    state = ckpt.write(state, step, wall_ms,
+                    state = ckpt.write(with_auth(state, auth_from), step, wall_ms,
                                        int(err * 1e9) if err >= 0 else -1, converged)
+                    auth_from = None
                     last_written = step
                     kept.clear()
                 elif (step % 5) == 0:
                     state = rdir.reset(state, step)
                     kept.clear()
+            if auth_from is not None:
+                state = with_auth(state, auth_from)
         finally:
             e_by_src.unpersist()
             e_by_dst.unpersist()

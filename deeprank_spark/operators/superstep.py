@@ -29,7 +29,7 @@ import json
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 # Session settings a superstep loop fixes for its whole call. With AQE on,
@@ -156,12 +156,13 @@ class SuperstepCheckpointer:
         sort is fully value-determined (measured: rank maxdiff 6.9e-18
         under range layout vs 0.0 under this one)."""
         path = os.path.join(self.base, f"superstep={step}")
-        state.sortWithinPartitions(self.state_cols[0]).write.mode(
-            "overwrite"
-        ).parquet(path)
-        self._lineage_rows(state, step, wall_ms).write.mode("append").parquet(
-            os.path.join(self.base, "lineage")
-        )
+        rows = Observation()
+        state.sortWithinPartitions(self.state_cols[0]).observe(
+            rows, F.count(F.lit(1)).alias("n")
+        ).write.mode("overwrite").parquet(path)
+        self._lineage_rows(state, step, wall_ms, rows.get["n"]).write.mode(
+            "append"
+        ).parquet(os.path.join(self.base, "lineage"))
         write_marker(self.base, step, {
             "superstep": step,
             "wall_ms": wall_ms,
@@ -182,15 +183,17 @@ class SuperstepCheckpointer:
         {name: re-read DataFrame}."""
         base = os.path.join(self.base, f"superstep={step}")
         out = {}
+        rows = Observation()
         for name, df in sections.items():
             path = os.path.join(base, name)
             # each section sorted within partitions on its leading column
             # (id / edge source) for row-group min/max pruning — see write()
-            df.sortWithinPartitions(df.columns[0]).write.mode(
-                "overwrite"
-            ).parquet(path)
+            df = df.sortWithinPartitions(df.columns[0])
+            if name == lineage_of:
+                df = df.observe(rows, F.count(F.lit(1)).alias("n"))
+            df.write.mode("overwrite").parquet(path)
             out[name] = df.sparkSession.read.parquet(path)
-        self._lineage_rows(out[lineage_of], step, wall_ms).write.mode(
+        self._lineage_rows(out[lineage_of], step, wall_ms, rows.get["n"]).write.mode(
             "append"
         ).parquet(os.path.join(self.base, "lineage"))
         meta = {
@@ -222,8 +225,20 @@ class SuperstepCheckpointer:
         }
         return secs, step, bool(meta.get("converged", False)), meta
 
-    def _lineage_rows(self, state: DataFrame, step: int, wall_ms: float) -> DataFrame:
-        per_part = (
+    def _lineage_rows(self, state: DataFrame, step: int, wall_ms: float,
+                      n_rows: int) -> DataFrame:
+        """Per-partition (rows, checksum) of a state whose row count
+        (n_rows) was observed on its own parquet write."""
+        # an EMPTY state (degenerate but legal, e.g. an empty input graph)
+        # must still leave a lineage row, or an auditor cannot tell
+        # "empty by design" from "rows went missing"
+        if n_rows == 0:
+            return state.sparkSession.createDataFrame(
+                [(step, -1, 0, 0, float(wall_ms))],
+                "superstep int, partition_id int, rows bigint, "
+                "checksum bigint, wall_ms double",
+            )
+        return (
             state.select(
                 F.spark_partition_id().alias("partition_id"),
                 F.xxhash64(*self.state_cols).alias("h"),
@@ -238,16 +253,6 @@ class SuperstepCheckpointer:
                 F.lit(float(wall_ms)).alias("wall_ms"),
             )
         )
-        # an EMPTY state (degenerate but legal, e.g. an empty input graph)
-        # must still leave a lineage row, or an auditor cannot tell
-        # "empty by design" from "rows went missing"
-        if state.isEmpty():
-            return state.sparkSession.createDataFrame(
-                [(step, -1, 0, 0, float(wall_ms))],
-                "superstep int, partition_id int, rows bigint, "
-                "checksum bigint, wall_ms double",
-            )
-        return per_part
 
 
 def read_kernel_lineage(spark: SparkSession, checkpoint_dir: str, run_id: str) -> DataFrame:

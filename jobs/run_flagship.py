@@ -6,6 +6,7 @@ multi-executor cluster; only --master and the IO locations change):
     python jobs/build_pyfiles.py   # -> dist/deeprank_spark.zip
     spark-submit \
         --master <cluster-or-local[N]> \
+        --driver-java-options "-XX:TieredStopAtLevel=1" \
         --py-files dist/deeprank_spark.zip \
         jobs/run_flagship.py \
         --transcripts <path-or-iceberg-table> \

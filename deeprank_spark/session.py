@@ -26,8 +26,16 @@ spark-submit entrypoints share one tuning story:
   extraJavaOptions go after the flag and HotSpot takes the last
   occurrence, so
   extra_conf={"spark.driver.extraJavaOptions": "-XX:TieredStopAtLevel=4"}
-  restores the stock JIT. spark-submit starts the driver JVM before any
-  builder conf is read: pass --driver-java-options there (README.md).
+  restores the stock JIT. The long-lived test JVM ran slower under C1, so
+  tests/conftest.py does that. get_spark always sets this key, so it
+  replaces a spark.driver.extraJavaOptions from spark-defaults.conf: pass
+  a deployment's own driver options through extra_conf. spark-submit
+  starts the driver JVM before any builder conf is read, and the jobs/
+  entry points build their own session, so there the flag goes on the
+  command line (--driver-java-options). Only local[4] passes were
+  measured (the benchmark above and the sf0.1 check in BASELINE.md), so
+  only local[4] launch lines pass it; larger and cluster launch lines
+  leave it off until a run at that scale is measured.
 """
 
 from __future__ import annotations

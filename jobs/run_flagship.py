@@ -6,7 +6,6 @@ multi-executor cluster; only --master and the IO locations change):
     python jobs/build_pyfiles.py   # -> dist/deeprank_spark.zip
     spark-submit \
         --master <cluster-or-local[N]> \
-        --driver-java-options "-XX:TieredStopAtLevel=1" \
         --py-files dist/deeprank_spark.zip \
         jobs/run_flagship.py \
         --transcripts <path-or-iceberg-table> \
@@ -16,6 +15,10 @@ multi-executor cluster; only --master and the IO locations change):
 With --sf-docs, the driver-provided documents parquet is converted to the
 transcripts shape (sentence-per-turn) instead of reading --transcripts.
 Writes the 9-relation fact DB + summary/keyword tables under --out.
+
+On one host at local[4], --driver-java-options "-XX:TieredStopAtLevel=1"
+gives the driver the C1-only JIT that deeprank_spark/session.py describes;
+on this job it cuts CPU but not wall time (the numbers are there).
 """
 
 from __future__ import annotations

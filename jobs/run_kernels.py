@@ -7,7 +7,6 @@ multi-executor cluster; only --master and the IO locations change):
     python jobs/build_pyfiles.py   # -> dist/deeprank_spark.zip
     spark-submit \
         --master <cluster-or-local[N]> \
-        --driver-java-options "-XX:TieredStopAtLevel=1" \
         --py-files dist/deeprank_spark.zip \
         jobs/run_kernels.py \
         --kernel {pagerank,hits,eig,cc,lpa,scc,sssp,wsssp,treach} \
@@ -24,11 +23,9 @@ resume tests in tests/test_kernels.py and tests/test_pagerank.py).
 --sf-dir derives the same customer->supplier bipartite edge table the
 driver contract's graph queries use.
 
---driver-java-options "-XX:TieredStopAtLevel=1" runs the driver with the
-C1 JIT only (deeprank_spark/session.py has the reasons). At sf0.1
-(--kernel pagerank --sf-dir sf0.1, 586,871 edges, local[4], 4 cores, 3
-runs each way) it does not lose: wall median 73.8 s vs 77.4 s without
-it, process CPU 191 vs 247 s.
+On one host at local[4], add --driver-java-options "-XX:TieredStopAtLevel=1"
+for the C1-only driver JIT that deeprank_spark/session.py describes
+(measured at sf0.1 in BASELINE.md).
 
 Success marker on stdout: one `KERNEL_DONE {...}` JSON line with rows,
 rounds, convergence flag and the tail of the per-round iteration metrics.

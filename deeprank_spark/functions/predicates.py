@@ -1,11 +1,21 @@
-"""Reference scalar recognizers as pure Catalyst Column expressions.
+"""Reference scalar recognizers as pure Catalyst expressions.
 
 Every predicate from /root/reference/textcrafts/deepRank.py:92-232 is
-re-expressed as a `pyspark.sql.functions` expression — JVM-side, codegen'd,
-usable inside higher-order array functions (forall) — never a Python UDF.
-The word dictionary and stopword set are small literal IN-sets (Catalyst
-turns them into InSet hash lookups); at a larger dictionary size these would
-become broadcast joins instead.
+re-expressed as Spark SQL text and applied with one `F.expr` parse per use —
+JVM-side, codegen'd, usable inside higher-order array functions (`forall`
+over a SQL lambda) — never a Python UDF. The word dictionary and stopword
+set are literal IN-lists rendered once at import (Catalyst turns them into
+the same `InSet` hash lookups that `Column.isin` produced); at a larger
+dictionary size these would become broadcast joins instead.
+
+SQL text, not `Column` algebra, because a PySpark `Column` is built by py4j
+round trips: `isin(list)` pays about four per value (a `functions` lookup,
+`lit`, the call, an `ArrayList.add`), so one `in_dict_col` cost ~1,700
+driver round trips. A predicate here costs the constant handful of one
+`F.expr` call whatever the list sizes.
+
+Callers pass a column NAME; the private `_*_sql` builders take any SQL
+expression text (a quoted column, or a lambda variable inside `forall`).
 """
 
 from __future__ import annotations
@@ -15,84 +25,116 @@ from pyspark.sql import functions as F
 
 from ..wordlist import STOP_WORDS, WORD_SET
 
-_WORDS = sorted(WORD_SET)
-_STOPS = sorted(STOP_WORDS)
+
+def _sql_str(s: str) -> str:
+    """`s` as a Spark SQL string literal (backslash escapes, the parser's
+    default; 50 stop words contain a `'`)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def in_list_sql(values) -> str:
+    """Comma-separated SQL string literals, for `x IN (...)`."""
+    return ", ".join(_sql_str(v) for v in values)
+
+
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+_WORDS = in_list_sql(sorted(WORD_SET))
+_STOPS = in_list_sql(sorted(STOP_WORDS))
+_SPEC = in_list_sql(("a", "A", "'s", "I"))
+_PUNCT = in_list_sql([*",.?;:-'()", '"'])
 
 _ENDS_WELL = ("ing", "ed", "ility", "ly", "er", "st")
 
 
-def _ends_well(c: Column) -> Column:
-    out = F.lit(False)
-    for s in _ENDS_WELL:
-        out = out | c.endswith(s)
-    return out
+def _ends_well_sql(w: str) -> str:
+    return "(" + " OR ".join(f"endswith({w}, '{s}')" for s in _ENDS_WELL) + ")"
 
 
-def in_dict_col(w: Column) -> Column:
+def _in_dict_sql(w: str) -> str:
     """inDict (deepRank.py:137-164): dictionary membership + suffix heuristics."""
-    low = F.lower(w)
-    stem = F.when(w.endswith("s"), F.substring(w, 1, F.length(w) - 1)).otherwise(F.lit(""))
-    return low.isin(_WORDS) | _ends_well(w) | (w.endswith("s") & _ends_well(stem))
-
-
-def is_name_col(w: Column) -> Column:
-    """isName (deepRank.py:104-105): all-alnum, first char upper."""
-    return w.rlike("^[A-Z][A-Za-z0-9]*$")
-
-
-def is_word_col(w: Column) -> Column:
-    """isWord (deepRank.py:96-101)."""
-    return (F.length(w) > 1) & (is_name_col(w) | in_dict_col(w))
-
-
-def is_stop_col(w: Column) -> Column:
-    return F.lower(w).isin(_STOPS)
-
-
-def _is_spec(w: Column) -> Column:
-    return w.isin("a", "A", "'s", "I") | (
-        w.rlike("^[A-Z]") & w.endswith(".")
+    stem = (
+        f"CASE WHEN endswith({w}, 's') "
+        f"THEN substring({w}, 1, length({w}) - 1) ELSE '' END"
     )
-
-
-def _is_punct(w: Column) -> Column:
-    return w.isin(*list(",.?;:-'()"), '"')
-
-
-def _has_dash(w: Column, part_pred) -> Column:
-    """hasDash (deepRank.py:127-134); parts contain no further dashes with our
-    tokenizer, so one recursion level is exact."""
-    parts = F.split(w, "-")
-    return (F.size(parts) >= 2) & F.forall(
-        parts, lambda p: (F.length(p) > 0) & part_pred(p)
-    )
-
-
-def _maybe_word_nodash(w: Column) -> Column:
     return (
-        (is_word_col(w) & (F.length(w) > 1))
-        | _is_spec(w)
-        | _is_punct(w)
-        | w.rlike("^[0-9]+$")
+        f"(lower({w}) IN ({_WORDS}) OR {_ends_well_sql(w)} "
+        f"OR (endswith({w}, 's') AND {_ends_well_sql(stem)}))"
     )
 
 
-def maybe_word_col(w: Column) -> Column:
-    """maybeWord (deepRank.py:112-116)."""
-    return w.isNotNull() & (
-        _maybe_word_nodash(w) | _has_dash(w, _maybe_word_nodash)
+def _is_name_sql(w: str) -> str:
+    """isName (deepRank.py:104-105): all-alnum, first char upper."""
+    return f"({w} RLIKE '^[A-Z][A-Za-z0-9]*$')"
+
+
+def _is_word_sql(w: str) -> str:
+    """isWord (deepRank.py:96-101)."""
+    return f"(length({w}) > 1 AND ({_is_name_sql(w)} OR {_in_dict_sql(w)}))"
+
+
+def _is_stop_sql(w: str) -> str:
+    return f"(lower({w}) IN ({_STOPS}))"
+
+
+def _is_spec_sql(w: str) -> str:
+    return f"({w} IN ({_SPEC}) OR ({w} RLIKE '^[A-Z]' AND endswith({w}, '.')))"
+
+
+def _is_punct_sql(w: str) -> str:
+    return f"({w} IN ({_PUNCT}))"
+
+
+def _maybe_word_nodash_sql(w: str) -> str:
+    return (
+        f"(({_is_word_sql(w)} AND length({w}) > 1) OR {_is_spec_sql(w)} "
+        f"OR {_is_punct_sql(w)} OR {w} RLIKE '^[0-9]+$')"
     )
 
 
-def is_clean_sent_col(lemmas: Column) -> Column:
-    """isCleanSent (deepRank.py:171-184) over a lemma array column."""
-    ok = F.forall(
-        lemmas,
-        lambda x: x.isNotNull()
-        & (F.length(x) > 0)
-        & (maybe_word_col(x) | in_dict_col(x)),
+def _maybe_word_sql(w: str) -> str:
+    """maybeWord (deepRank.py:112-116). hasDash (:127-134): parts contain no
+    further dashes with our tokenizer, so one recursion level is exact."""
+    has_dash = (
+        f"(size(split({w}, '-')) >= 2 AND forall(split({w}, '-'), "
+        f"p -> length(p) > 0 AND {_maybe_word_nodash_sql('p')}))"
     )
-    return (F.size(lemmas) >= 3) & ok
+    return f"({w} IS NOT NULL AND ({_maybe_word_nodash_sql(w)} OR {has_dash}))"
+
+
+def _is_clean_sent_sql(lemmas: str) -> str:
+    """isCleanSent (deepRank.py:171-184) over a lemma array expression."""
+    ok = (
+        f"x -> x IS NOT NULL AND length(x) > 0 "
+        f"AND ({_maybe_word_sql('x')} OR {_in_dict_sql('x')})"
+    )
+    return f"(size({lemmas}) >= 3 AND forall({lemmas}, {ok}))"
+
+
+def in_dict_col(name: str) -> Column:
+    return F.expr(_in_dict_sql(_ident(name)))
+
+
+def is_name_col(name: str) -> Column:
+    return F.expr(_is_name_sql(_ident(name)))
+
+
+def is_word_col(name: str) -> Column:
+    return F.expr(_is_word_sql(_ident(name)))
+
+
+def is_stop_col(name: str) -> Column:
+    return F.expr(_is_stop_sql(_ident(name)))
+
+
+def maybe_word_col(name: str) -> Column:
+    return F.expr(_maybe_word_sql(_ident(name)))
+
+
+def is_clean_sent_col(name: str) -> Column:
+    return F.expr(_is_clean_sent_sql(_ident(name)))
 
 
 def is_noun_tag(t: Column) -> Column:

@@ -313,7 +313,7 @@ def answer_votes(
         F.col("z.tag").alias("tag"),
     )
     q_keys = q_tokens.where(
-        maybe_word_col(F.col("lemma")) & ~is_stop_col(F.col("lemma"))
+        maybe_word_col("lemma") & ~is_stop_col("lemma")
         & _good_tag(F.col("tag"))
     ).select("conv_id", "q_idx", F.col("lemma").alias("key")).distinct()
 

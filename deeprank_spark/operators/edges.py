@@ -345,8 +345,8 @@ def svo_table(
     cands = r.where(
         vn
         & (F.col("lfrom") != F.col("lto"))
-        & is_word_col(F.col("lfrom"))
-        & is_word_col(F.col("lto"))
+        & is_word_col("lfrom")
+        & is_word_col("lto")
     )
     subj = (
         cands.where(F.col("rel").contains("subj"))

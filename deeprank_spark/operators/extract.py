@@ -139,8 +139,8 @@ def keywords(
     k = k or p.word_count
     cand = ranks_adj.where(
         (F.col("kind") == "W")
-        & maybe_word_col(F.col("key"))
-        & ~is_stop_col(F.col("key"))
+        & maybe_word_col("key")
+        & ~is_stop_col("key")
     )
     parts = cand.select(
         *partition_cols, "key", F.explode(F.split("key", " ")).alias("lemma")
@@ -169,7 +169,7 @@ def summary(
     # sentences never move, and the lemma arrays the filter reads are
     # consumed map-side instead of being shipped through the join
     clean = ranks_adj.where(F.col("kind") == "S").join(
-        parsed.where(is_clean_sent_col(F.col("lemmas")))
+        parsed.where(is_clean_sent_col("lemmas"))
         .select(
             "conv_id",
             F.col("sent_id").cast("string").alias("key"),

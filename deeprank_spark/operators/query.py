@@ -111,8 +111,8 @@ def personalization_vectors(
     qranks = pagerank_per_conv(qged, alpha=p.damping, tol=p.tol, max_iter=p.max_iter)
     pers = qranks.where(
         (F.col("kind") == "W")
-        & maybe_word_col(F.col("key"))
-        & ~is_stop_col(F.col("key"))
+        & maybe_word_col("key")
+        & ~is_stop_col("key")
     )
     return pers.select(
         F.split_part(F.col("conv_id"), F.lit(_QSEP), F.lit(1)).alias("conv_id"),
@@ -216,7 +216,7 @@ def answer_queries(
             F.split_part(F.col("conv_id"), F.lit(_QSEP), F.lit(2)).cast("int").alias("q_idx"),
             "token",
         )
-        .where(maybe_word_col(F.col("token")) & ~is_stop_col(F.col("token")))
+        .where(maybe_word_col("token") & ~is_stop_col("token"))
     )
     doc_tok_sents = token_sentences(multi_edges)
     good = (
@@ -232,7 +232,7 @@ def answer_queries(
             F.concat_ws(" ", "words").alias("sent_text"), "sent_id",
         ),
         ["conv_id", "key"],
-    ).where(is_clean_sent_col(F.col("lemmas"))).persist()
+    ).where(is_clean_sent_col("lemmas")).persist()
     cands = sents.join(good, ["conv_id", "q_idx", "sent_id"], "leftsemi")
     # rank ties compare at the published 8-decimal precision (see
     # extract._topk) so engine and differential oracles order identically

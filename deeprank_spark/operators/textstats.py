@@ -7,9 +7,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.predicates import in_list_sql
 from ..wordlist import STOP_WORDS
 
-_STOPS = sorted(STOP_WORDS)
+_STOPS_SQL = in_list_sql(sorted(STOP_WORDS))
 
 # tiny deterministic language profiles: characteristic high-frequency words
 _LANG_MARKERS = {
@@ -50,7 +51,7 @@ def language_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     scores = []
     for lang, markers in _LANG_MARKERS.items():
         s = (
-            F.size(F.filter(F.col("toks"), lambda x: x.isin(markers)))
+            F.expr(f"size(filter(toks, x -> x IN ({in_list_sql(markers)})))")
             / F.greatest(F.size("toks"), F.lit(1)).cast("double")
         ).alias(f"s_{lang}")
         scores.append(s)
@@ -74,8 +75,8 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     length band, punctuation ratio, stopword ratio, alpha ratio.
     -> (doc_id, n_tokens, punct_ratio, stop_ratio, alpha_ratio, quality)."""
     txt = F.col(text_col)
-    t = tokens_col(txt)
-    n_tok = F.size(t)
+    base = docs.select(id_col, text_col, tokens_col(txt).alias("__toks"))
+    n_tok = F.size("__toks")
     n_chars = F.greatest(F.length(txt), F.lit(1))
     punct = (
         F.length(F.regexp_replace(txt, r"[^.,;:!?()\[\]\"']", "")) / n_chars.cast("double")
@@ -84,7 +85,7 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
         F.length(F.regexp_replace(txt, r"[^A-Za-z]", "")) / n_chars.cast("double")
     )
     stops = (
-        F.size(F.filter(t, lambda x: x.isin(_STOPS)))
+        F.expr(f"size(filter(`__toks`, x -> x IN ({_STOPS_SQL})))")
         / F.greatest(n_tok, F.lit(1)).cast("double")
     )
     len_band = F.when((n_tok >= 10) & (n_tok <= 5000), 1.0).otherwise(
@@ -96,7 +97,7 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
         + 0.2 * alpha
         + 0.2 * (1.0 - F.least(F.lit(1.0), punct * 5.0))
     )
-    return docs.select(
+    return base.select(
         F.col(id_col),
         n_tok.alias("n_tokens"),
         F.round(punct, 6).alias("punct_ratio"),

@@ -8,6 +8,16 @@ DataFrames — one per relation, every row keyed by conv_id, partitioned by
 bucket(conv_id) so a conversation's facts are co-located (the Prolog
 file-per-document layout becomes partition-pruned reads).
 
+The nine writes are independent, so they are submitted together from a
+thread pool, one thread per relation — Spark's "multiple parallel jobs from
+separate threads" pattern. Planning a write is driver-serial work; while one
+relation is being planned, the FIFO scheduler runs the others' tasks on the
+idle cores. Each worker is wrapped in `inheritable_thread_target`, so its
+JVM thread carries the caller's local properties: the job group (callers
+attribute and cancel the export's jobs by it), description and scheduler
+pool would otherwise be lost in the pool's fresh threads. Every write runs
+to completion; the first failure, in RELATIONS order, is then re-raised.
+
 NER divergence (documented): the reference calls CoreNLP NER
 (qpro.py:155-162, keep tag != 'O'). No NER model exists in this container,
 so `ner_table` emits a deterministic rule NER (capitalized non-initial
@@ -19,10 +29,12 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.util import inheritable_thread_target
 
 from ..engine import Digest
 from .tables import read_table, write_table
@@ -93,11 +105,22 @@ def export_fact_db(
         "keyword": keywords.select("conv_id", "keyword"),
     }
     sep = "_" if _is_table_name(base) else "/"
-    schemas = {}
-    for name, df in rels.items():
-        write_table(df, f"{base}{sep}{name}", bucket_col="conv_id",
+
+    def write(name: str) -> None:
+        write_table(rels[name], f"{base}{sep}{name}", bucket_col="conv_id",
                     num_buckets=num_buckets)
-        schemas[name] = df.schema.json()
+
+    spark = d.parsed.sparkSession
+    with ThreadPoolExecutor(max_workers=len(rels)) as pool:
+        # one wrap per write: each clones the caller's properties, so the
+        # writes' SQL execution ids never share one mutable Properties
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(write), name)
+            for name in rels
+        ]
+    for fut in futures:  # the pool has joined: every write has finished
+        fut.result()
+    schemas = {name: df.schema.json() for name, df in rels.items()}
     if not _is_table_name(base):
         # self-describing export: schemas survive even for relations that
         # were empty at write time (Iceberg tables carry their own schema)

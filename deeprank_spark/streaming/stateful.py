@@ -11,8 +11,13 @@ window/session builtins don't fit:
 - running_counts: per-key running totals emitted on every update (update
   mode) — the streaming analog of groupBy().count() with retained state.
 
-Both work identically under `trigger(availableNow)` batch-replay and a live
-stream, and their state survives restarts via the checkpoint location.
+Both give the same results under `trigger(availableNow)` batch-replay and a
+live stream, and their state survives restarts via the checkpoint location.
+One difference in how they run: with `state_ttl_ms`, first_seen_filter uses
+ProcessingTimeTimeout, which always asks for another (no-data) batch, so an
+availableNow query over it never terminates by itself (and
+`processAllAvailable()` never returns); stop it once its progress shows the
+input consumed.
 """
 
 from __future__ import annotations

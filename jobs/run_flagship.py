@@ -48,7 +48,7 @@ def main() -> None:
     # --py-files zip shipped to every executor's PYTHONPATH
     from deeprank_spark.engine import flagship
     from deeprank_spark.parse import documents_as_transcripts
-    from deeprank_spark.sources.export import export_fact_db
+    from deeprank_spark.sources.export import export_fact_db, read_fact_db
     from deeprank_spark.sources.tables import read_table, read_transcripts
 
     if args.sf_docs:
@@ -58,10 +58,14 @@ def main() -> None:
         tr = read_transcripts(spark, args.transcripts)
 
     out = flagship(tr)
-    rels = export_fact_db(
+    export_fact_db(
         out["digest"], out["ranks"], out["summary"], out["keywords"], args.out
     )
-    counts = {name: df.count() for name, df in rels.items()}
+    # count what was written: the returned relation DataFrames would
+    # recompute the whole pass once per relation
+    counts = {
+        name: df.count() for name, df in read_fact_db(spark, args.out).items()
+    }
     print("FLAGSHIP_DONE", counts)
     spark.stop()
 

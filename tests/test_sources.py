@@ -1,5 +1,10 @@
 """Fact-DB export round-trip + catalog-agnostic IO (parquet path)."""
 
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
 from deeprank_spark.engine import flagship
 from deeprank_spark.sources.export import RELATIONS, export_fact_db, read_fact_db
 from deeprank_spark.sources.tables import read_transcripts, write_table
@@ -44,6 +49,52 @@ def test_fact_db_round_trip(spark, tmp_path):
     assert a == b
     # every relation is keyed by conv_id and bucketed on disk
     assert all("conv_id" in back[n].columns for n in RELATIONS)
+
+
+def test_fact_db_export_jobs_carry_caller_job_group(spark, tmp_path):
+    """The concurrent writes run in pool threads; every job they start
+    still carries the job group the caller set (callers attribute and
+    cancel the export by it)."""
+    tr = gen_transcripts_df(spark, n_convs=3, turns_per_conv=4, seed=5)
+    out = flagship(tr)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("fact-db-export", "export under a caller's job group")
+    try:
+        export_fact_db(
+            out["digest"], out["ranks"], out["summary"], out["keywords"],
+            str(tmp_path / "facts"), num_buckets=4,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    grouped = tracker.getJobIdsForGroup("fact-db-export")
+    assert len(grouped) >= len(RELATIONS)  # at least one job per write
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
+def test_fact_db_export_failure_waits_for_other_writes(spark, tmp_path):
+    """One failing write re-raises its own error, and only after the other
+    eight writes (including those submitted after it) have finished."""
+    tr = gen_transcripts_df(spark, n_convs=3, turns_per_conv=4, seed=5)
+    out = flagship(tr)
+    ranks = out["ranks"]
+    failing = ranks.withColumn(
+        "key",
+        F.when(F.col("key").isNotNull(), F.raise_error(F.lit("rank write failed")))
+        .otherwise(F.col("key")),
+    )
+    assert ranks.count() > 0
+    base = str(tmp_path / "facts")
+    with pytest.raises(Exception, match="rank write failed"):
+        export_fact_db(
+            out["digest"], failing, out["summary"], out["keywords"], base,
+            num_buckets=4,
+        )
+    for name in RELATIONS:
+        done = os.path.exists(os.path.join(base, name, "_SUCCESS"))
+        assert done == (name != "rank"), name
 
 
 def test_read_transcripts_jsonl_and_csv(spark, tmp_path):

@@ -5,6 +5,7 @@ state survives restarts (the first_seen filter must NOT re-emit keys seen
 in the first run)."""
 
 import datetime as dt
+import time
 
 from deeprank_spark.streaming.stateful import first_seen_filter, running_counts
 
@@ -19,7 +20,25 @@ def _rows(spark, keys, base_min=0):
     )
 
 
-def _run_stream(spark, src, ck, out_fn, out_dir, mode):
+def _finish(q, n_rows=None):
+    """End `q` before the test reads its output. An availableNow query stops
+    by itself once the backlog is processed. One whose operator has a
+    processing-time timeout keeps running no-data batches and never stops
+    (nor does `processAllAvailable()` return), so pass `n_rows`, the rows
+    it must consume: it is stopped once its progress shows them."""
+    try:
+        if n_rows is None:
+            assert q.awaitTermination(120), "availableNow query did not terminate"
+            return
+        deadline = time.monotonic() + 120
+        while sum(p["numInputRows"] for p in q.recentProgress) < n_rows:
+            assert time.monotonic() < deadline, "query did not consume its input"
+            time.sleep(0.1)
+    finally:
+        q.stop()
+
+
+def _run_stream(spark, src, ck, out_fn, out_dir, mode, n_rows=None):
     stream = spark.readStream.schema(SCHEMA).parquet(src)
     w = out_fn(stream).writeStream.option("checkpointLocation", ck)
     if mode == "append":
@@ -31,7 +50,7 @@ def _run_stream(spark, src, ck, out_fn, out_dir, mode):
             lambda batch, _id: batch.write.mode("append").parquet(out_dir)
         )
     q = w.outputMode(mode).trigger(availableNow=True).start()
-    q.awaitTermination(120)
+    _finish(q, n_rows)
 
 
 def test_first_seen_filter_dedups_across_restarts(spark, tmp_path):
@@ -75,8 +94,6 @@ def test_first_seen_ttl_evicts_and_reemits(spark, tmp_path):
     batch after expiry) and a later re-occurrence re-emits — the bounded-
     state contract. ProcessingTimeTimeout fires for groups WITHOUT data in
     the batch, so eviction happens on the intermediate batch."""
-    import time
-
     src = str(tmp_path / "src")
     ck = str(tmp_path / "ck")
     out = str(tmp_path / "out")
@@ -86,7 +103,7 @@ def test_first_seen_ttl_evicts_and_reemits(spark, tmp_path):
         _run_stream(
             spark, src, ck,
             lambda s: first_seen_filter(s, state_ttl_ms=500),
-            out, "append",
+            out, "append", n_rows=len(keys),
         )
 
     run(["a"], 0)
@@ -153,7 +170,7 @@ def test_asof_enrich_stream_matches_batch(spark, tmp_path):
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(120)
+            _finish(q)
         got = {
             r["event_id"]: (r["asof_event_id"], r["asof_value"])
             for r in spark.read.parquet(out).collect()
@@ -224,7 +241,7 @@ def test_asof_enrich_reordered_tolerates_late_rights(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _finish(q)
     got = {
         r["event_id"]: (r["asof_event_id"], r["asof_value"])
         for r in spark.read.parquet(out).collect()

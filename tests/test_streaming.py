@@ -58,7 +58,10 @@ def test_streaming_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120), "availableNow query did not terminate"
+    finally:
+        q.stop()
     got = (
         spark.read.parquet(out_dir)
         .toPandas()

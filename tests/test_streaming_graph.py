@@ -39,7 +39,10 @@ def test_streaming_query_end_to_end(spark, tmp_path):
         q = streaming_components(
             spark.readStream.schema(SCHEMA).parquet(src), state, ck, out
         )
-        q.awaitTermination(120)
+        try:
+            assert q.awaitTermination(120), "availableNow query did not terminate"
+        finally:
+            q.stop()
 
     push_and_run(B1)
     push_and_run(B2)  # second START on the same checkpoint = restart path

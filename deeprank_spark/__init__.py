@@ -11,7 +11,8 @@ Spark DataFrame dataflow:
   jumping), strongly connected components (FW-BW + partition refinement),
   label propagation, triangle count, unweighted/weighted SSSP, k-core /
   coreness / clustering / butterflies / link prediction — each with a
-  per-conversation Arrow/numpy fast path (applyInPandas; one shuffle
+  per-conversation Arrow/numpy fast path (one shared runner,
+  operators/per_conv.py: a conv_id repartition + mapInPandas, one shuffle
   total) where applicable and a distributed superstep path (SpMV join/agg
   loop with salting). EVERY iterative kernel checkpoints its rank/label
   state per superstep with a per-partition lineage table and resumes from

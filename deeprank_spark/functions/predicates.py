@@ -44,7 +44,7 @@ def _ident(name: str) -> str:
 _WORDS = in_list_sql(sorted(WORD_SET))
 _STOPS = in_list_sql(sorted(STOP_WORDS))
 _SPEC = in_list_sql(("a", "A", "'s", "I"))
-_PUNCT = in_list_sql([*",.?;:-'()", '"'])
+_PUNCT = _sql_str(",.?;:-'()")
 
 _ENDS_WELL = ("ing", "ed", "ility", "ly", "er", "st")
 
@@ -84,7 +84,9 @@ def _is_spec_sql(w: str) -> str:
 
 
 def _is_punct_sql(w: str) -> str:
-    return f"({w} IN ({_PUNCT}))"
+    """maybeWord's `w in ",.?;:-'()"` is a SUBSTRING test (`,.` and `()`
+    pass); the length guard is there because instr(s, '') is 1."""
+    return f"((length({w}) > 0 AND instr({_PUNCT}, {w}) > 0) OR {w} = '\"')"
 
 
 def _maybe_word_nodash_sql(w: str) -> str:

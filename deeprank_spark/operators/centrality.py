@@ -6,7 +6,8 @@ algorithm), closeness (Wasserman-Faust component-scaled form, the
 networkx default for disconnected graphs) and harmonic centrality
 (Boldi-Vigna 2014 form, nx.harmonic_centrality — the disconnection-robust
 closeness variant) over each conversation's UNDIRECTED simple
-projection, computed inside applyInPandas.
+projection, computed in the shared per-conversation runner
+(operators/per_conv.py).
 
 Scale shape: a conversation graph is small (tens of vertices), so the
 corpus-scale strategy is the one the whole engine uses for
@@ -24,20 +25,15 @@ from __future__ import annotations
 from collections import deque
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+from pyspark.sql.types import DoubleType, StructField
 
-PER_CONV_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("kind", StringType(), False),
-        StructField("key", StringType(), False),
-        StructField("betweenness", DoubleType(), False),
-        StructField("closeness", DoubleType(), False),
-        StructField("harmonic", DoubleType(), False),
-    ]
-)
+from .per_conv import per_conv_map
+
+_CENTRALITIES = [
+    StructField(c, DoubleType(), False)
+    for c in ("betweenness", "closeness", "harmonic")
+]
 
 
 def brandes_betweenness(n: int, adj: list) -> list:
@@ -130,27 +126,7 @@ def centrality_per_conv(gedges: DataFrame) -> DataFrame:
     conversation's undirected simple projection (self-loops dropped,
     parallel edges collapsed — nx.Graph semantics)."""
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(
-                {
-                    "conv_id": [],
-                    "kind": [],
-                    "key": [],
-                    "betweenness": [],
-                    "closeness": [],
-                    "harmonic": [],
-                }
-            )
-        conv = pdf["conv_id"].iloc[0]
-        skey = pdf["src_kind"].astype(str) + pdf["src"].astype(str)
-        dkey = pdf["dst_kind"].astype(str) + pdf["dst"].astype(str)
-        nodes, inv = np.unique(
-            np.concatenate([skey.to_numpy(), dkey.to_numpy()]), return_inverse=True
-        )
-        m = len(pdf)
-        n = len(nodes)
-        a, b = inv[:m], inv[m:]
+    def kernel(a, b, n, _nodes):
         mask = a != b
         und = np.unique(
             np.stack(
@@ -163,18 +139,6 @@ def centrality_per_conv(gedges: DataFrame) -> DataFrame:
         for u, v in und:
             adj[u].append(int(v))
             adj[v].append(int(u))
-        bc = brandes_betweenness(n, adj)
-        cc = closeness_wf(n, adj)
-        hc = harmonic_bfs(n, adj)
-        return pd.DataFrame(
-            {
-                "conv_id": conv,
-                "kind": [s[0] for s in nodes],
-                "key": [s[1:] for s in nodes],
-                "betweenness": bc,
-                "closeness": cc,
-                "harmonic": hc,
-            }
-        )
+        return brandes_betweenness(n, adj), closeness_wf(n, adj), harmonic_bfs(n, adj)
 
-    return gedges.groupBy("conv_id").applyInPandas(run, PER_CONV_SCHEMA)
+    return per_conv_map(gedges, kernel, _CENTRALITIES)

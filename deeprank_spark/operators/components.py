@@ -7,7 +7,8 @@ weakly-connected components via hash-min over the undirected projection
 minimum vertex key in the component, which makes outputs exactly comparable
 with the networkx oracle.
 
-Per-conversation path: union-find inside applyInPandas (one shuffle).
+Per-conversation path: union-find in the shared per-conversation runner
+(operators/per_conv.py: one conv_id shuffle, mapInPandas).
 Distributed path: superstep min-label exchange with localCheckpoint per
 round; converges in O(diameter) rounds.
 """
@@ -21,11 +22,11 @@ import tempfile
 import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField
 
+from .per_conv import per_conv_map
 from .superstep import KernelRun, SuperstepCheckpointer
 
 
@@ -69,16 +70,8 @@ class _ResetDir:
             df = df.localCheckpoint(eager=True)
         return df
 
-_SEP = ""  # kind is a single char; token = kind + key parses positionally
 
-PER_CONV_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("kind", StringType(), False),
-        StructField("key", StringType(), False),
-        StructField("component", StringType(), False),
-    ]
-)
+_COMPONENT = [StructField("component", StringType(), False)]
 
 
 def _union_find(n: int, src: np.ndarray, dst: np.ndarray) -> np.ndarray:
@@ -101,30 +94,13 @@ def _union_find(n: int, src: np.ndarray, dst: np.ndarray) -> np.ndarray:
 
 def components_per_conv(gedges: DataFrame) -> DataFrame:
     """(conv_id, kind, key, component) with component = min node token
-    (kind+sep+key) of the weakly-connected component."""
+    (kind+key) of the weakly-connected component."""
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(
-                {"conv_id": [], "kind": [], "key": [], "component": []}
-            )
-        conv = pdf["conv_id"].iloc[0]
-        skey = pdf["src_kind"].astype(str) + pdf["src"].astype(str)
-        dkey = pdf["dst_kind"].astype(str) + pdf["dst"].astype(str)
-        nodes, inv = np.unique(
-            np.concatenate([skey.to_numpy(), dkey.to_numpy()]), return_inverse=True
-        )
-        m = len(pdf)
-        roots = _union_find(len(nodes), inv[:m], inv[m:])
-        # representative = min node index in component == min token (np.unique sorts)
-        comp_token = nodes[roots]
-        kinds = [s[0] for s in nodes]
-        keys = [s[1:] for s in nodes]
-        return pd.DataFrame(
-            {"conv_id": conv, "kind": kinds, "key": keys, "component": comp_token}
-        )
+    def kernel(src_idx, dst_idx, n, nodes):
+        # root = min node index in the component == min token
+        return (nodes[_union_find(n, src_idx, dst_idx)],)
 
-    return gedges.groupBy("conv_id").applyInPandas(run, PER_CONV_SCHEMA)
+    return per_conv_map(gedges, kernel, _COMPONENT)
 
 
 def components_distributed(

@@ -38,17 +38,29 @@ ONE driver action per superstep; convergence mode adds one shuffle-free
 scan of the materialized blocks for the L1 error. Durable checkpoints,
 lineage and bitwise resume via the shared superstep protocol
 (operators/superstep.py), like every other iterative kernel here.
+
+`hits_per_conv` runs the same schedule on every conversation graph in
+numpy, through the shared per-conversation runner (operators/per_conv.py).
 """
 
 from __future__ import annotations
 
 import time
 
+import numpy as np
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField
 
 from .components import _ResetDir
+from .per_conv import per_conv_map
 from .superstep import KernelRun, SuperstepCheckpointer, pinned_plan
+
+
+_HUB_AUTH = [
+    StructField("hub", DoubleType(), False),
+    StructField("auth", DoubleType(), False),
+]
 
 
 def _sum_normalized(state: DataFrame) -> DataFrame:
@@ -302,79 +314,37 @@ def hits_distributed(
 
 def hits_per_conv(gedges: DataFrame, max_iter: int = 100, tol: float = 1.0e-8) -> DataFrame:
     """(conv_id, kind, key, hub, auth) for every conversation graph —
-    the per-conversation twin of hits_distributed (same embarrassingly-
-    parallel applyInPandas shape as pagerank_per_conv: ONE conv_id
-    shuffle, the whole power iteration vectorized in numpy per group).
+    the per-conversation twin of hits_distributed, through the shared
+    per-conversation runner (operators/per_conv.py: ONE conv_id shuffle,
+    the whole power iteration vectorized in numpy per conversation).
     Directed simple projection (parallel edges collapsed); the nx
-    schedule, including the edgeless all-zero divergence. tol=0 runs
+    schedule (a conversation always has an edge, so hits_distributed's
+    edgeless all-zero divergence cannot arise here). tol=0 runs
     exactly max_iter iterations; tol>0 raises (inside the task, so the
-    action fails) when any conversation has not converged by max_iter."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    action fails, naming the conversation) when any conversation has not
+    converged by max_iter."""
 
-    schema = StructType(
-        [
-            StructField("conv_id", StringType(), False),
-            StructField("kind", StringType(), False),
-            StructField("key", StringType(), False),
-            StructField("hub", DoubleType(), False),
-            StructField("auth", DoubleType(), False),
-        ]
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(
-                {"conv_id": [], "kind": [], "key": [], "hub": [], "auth": []}
-            )
-        conv = pdf["conv_id"].iloc[0]
-        skey = pdf["src_kind"].astype(str) + pdf["src"].astype(str)
-        dkey = pdf["dst_kind"].astype(str) + pdf["dst"].astype(str)
-        nodes, inv = np.unique(
-            np.concatenate([skey.to_numpy(), dkey.to_numpy()]), return_inverse=True
-        )
-        m = len(pdf)
-        n = len(nodes)
-        pairs = np.unique(inv[:m].astype(np.int64) * n + inv[m:].astype(np.int64))
+    def kernel(src_idx, dst_idx, n, _nodes):
+        pairs = np.unique(src_idx.astype(np.int64) * n + dst_idx.astype(np.int64))
         s_idx, d_idx = pairs // n, pairs % n
         h = np.full(n, 1.0 / n, dtype=np.float64)
         a = np.zeros(n, dtype=np.float64)
-        if len(pairs):
-            for _ in range(max_iter):
-                hlast = h
-                a = np.bincount(d_idx, weights=hlast[s_idx], minlength=n)
-                h = np.bincount(s_idx, weights=a[d_idx], minlength=n)
-                h = h / h.max()
-                a = a / a.max()
-                if tol > 0 and np.abs(h - hlast).sum() < tol:
-                    break
-            else:
-                if tol > 0:  # nx and hits_distributed raise too
-                    raise RuntimeError(
-                        f"hits_per_conv: conversation {conv}: no convergence "
-                        f"in {max_iter} iterations"
-                    )
-            a = a / a.sum()
-            h = h / h.sum()
+        for _ in range(max_iter):
+            hlast = h
+            a = np.bincount(d_idx, weights=hlast[s_idx], minlength=n)
+            h = np.bincount(s_idx, weights=a[d_idx], minlength=n)
+            h = h / h.max()
+            a = a / a.max()
+            if tol > 0 and np.abs(h - hlast).sum() < tol:
+                break
         else:
-            h = np.zeros(n)  # edgeless divergence, same as hits_distributed
-        return pd.DataFrame(
-            {
-                "conv_id": conv,
-                "kind": [x[0] for x in nodes],
-                "key": [x[1:] for x in nodes],
-                "hub": h,
-                "auth": a,
-            }
-        )
+            if tol > 0:  # nx and hits_distributed raise too
+                raise RuntimeError(
+                    f"hits_per_conv: no convergence in {max_iter} iterations"
+                )
+        return h / h.sum(), a / a.sum()
 
-    return gedges.groupBy("conv_id").applyInPandas(run, schema)
+    return per_conv_map(gedges, kernel, _HUB_AUTH)
 
 
 def eigenvector_distributed(

@@ -12,21 +12,13 @@ from __future__ import annotations
 import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField
 
-_SEP = ""  # kind is a single char; token = kind + key parses positionally
+from .per_conv import per_conv_map
 
-PER_CONV_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("kind", StringType(), False),
-        StructField("key", StringType(), False),
-        StructField("label", StringType(), False),
-    ]
-)
+_LABEL = [StructField("label", StringType(), False)]
 
 
 def _lpa_numpy(n: int, src: np.ndarray, dst: np.ndarray, max_iter: int) -> np.ndarray:
@@ -63,24 +55,13 @@ def _lpa_numpy(n: int, src: np.ndarray, dst: np.ndarray, max_iter: int) -> np.nd
 
 
 def lpa_per_conv(gedges: DataFrame, max_iter: int = 20) -> DataFrame:
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"conv_id": [], "kind": [], "key": [], "label": []})
-        conv = pdf["conv_id"].iloc[0]
-        skey = pdf["src_kind"].astype(str) + pdf["src"].astype(str)
-        dkey = pdf["dst_kind"].astype(str) + pdf["dst"].astype(str)
-        nodes, inv = np.unique(
-            np.concatenate([skey.to_numpy(), dkey.to_numpy()]), return_inverse=True
-        )
-        m = len(pdf)
-        labels = _lpa_numpy(len(nodes), inv[:m], inv[m:], max_iter)
-        kinds = [s[0] for s in nodes]
-        keys = [s[1:] for s in nodes]
-        return pd.DataFrame(
-            {"conv_id": conv, "kind": kinds, "key": keys, "label": nodes[labels]}
-        )
+    """(conv_id, kind, key, label) with label = a node token, through the
+    shared per-conversation runner (operators/per_conv.py)."""
 
-    return gedges.groupBy("conv_id").applyInPandas(run, PER_CONV_SCHEMA)
+    def kernel(src_idx, dst_idx, n, nodes):
+        return (nodes[_lpa_numpy(n, src_idx, dst_idx, max_iter)],)
+
+    return per_conv_map(gedges, kernel, _LABEL)
 
 
 def lpa_distributed(

@@ -12,11 +12,13 @@ alpha=0.85, tol=1e-6, max_iter=100):
 Two physical strategies for one logical kernel:
 
 1. `pagerank_per_conv` — the 10^12-turn fast path. Conversations are
-   independent graphs, so ONE shuffle (groupBy conv_id) moves each graph to
-   one task, and the whole power iteration runs in numpy inside
-   applyInPandas (Arrow batches, vectorized bincount gather-scatter =
+   independent graphs, so ONE shuffle (the conv_id repartition of the
+   shared per-conversation runner, operators/per_conv.py) moves each graph
+   to one task, and the whole power iteration runs in numpy inside
+   mapInPandas (Arrow batches, vectorized bincount gather-scatter =
    CSR-style SpMV; no per-row Python). 10^10 conversations stream through
-   as ordinary grouped partitions — no supersteps, no driver round-trips.
+   as ordinary partitions — no supersteps, no driver round-trips.
+   Personalized ranks take a cogroup of edges and personalization rows.
 
 2. `pagerank_distributed` — for one giant graph (cross-conversation link
    graph) that cannot sit in a single task: driver-side superstep loop over
@@ -39,13 +41,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, StructField, StructType
 
+from .per_conv import per_conv_map, per_conv_schema
 from .superstep import (
     completed_supersteps,
     pinned_plan,
@@ -53,16 +51,7 @@ from .superstep import (
     write_marker,
 )
 
-PER_CONV_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("kind", StringType(), False),
-        StructField("key", StringType(), False),
-        StructField("rank", DoubleType(), False),
-    ]
-)
-
-_SEP = ""  # kind is a single char; token = kind + key parses positionally
+_RANK = [StructField("rank", DoubleType(), False)]
 
 
 def _dedup_pairs(src_idx: np.ndarray, dst_idx: np.ndarray, n: int):
@@ -141,62 +130,12 @@ def _conv_pagerank_pdf(
     )
 
 
-def _batched_partition_pagerank(
-    batches, alpha: float, tol: float, max_iter: int
-):
-    """mapInPandas body: run the per-conv kernel for EVERY conversation in
-    the partition out of two whole-partition numpy string arrays, emitting
-    one output frame per partition. Identical float schedule to
-    _conv_pagerank_pdf — same np.unique node order, same bincount SpMV per
-    conversation — but the pandas-DataFrame + Arrow round-trip is paid once
-    per PARTITION instead of once per (tiny) conversation group, which is
-    the difference between ~5 ms/conv of framework overhead and ~0.3 ms/conv
-    of numpy at 30-turn conversation sizes."""
-    chunks = [p for p in batches if len(p)]
-    if not chunks:
-        return
-    pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-    conv = pdf["conv_id"].to_numpy()
-    # stable sort: groups conversations while preserving within-conv arrival
-    # order (the same summation-order equivalence class as the grouped path;
-    # group arrival order was never deterministic to begin with)
-    order = np.argsort(conv, kind="stable")
-    conv = conv[order]
-    skey = (pdf["src_kind"].astype(str) + pdf["src"].astype(str)).to_numpy()[order]
-    dkey = (pdf["dst_kind"].astype(str) + pdf["dst"].astype(str)).to_numpy()[order]
-    uniq, starts = np.unique(conv, return_index=True)
-    bounds = np.append(starts, len(conv))
-    out_conv, out_kind, out_key, out_rank = [], [], [], []
-    for i in range(len(uniq)):
-        a, b = bounds[i], bounds[i + 1]
-        m = b - a
-        nodes, inv = np.unique(
-            np.concatenate([skey[a:b], dkey[a:b]]), return_inverse=True
-        )
-        n = len(nodes)
-        p = np.full(n, 1.0 / n, dtype=np.float64)
-        x = _power_iteration(inv[:m], inv[m:], n, p, alpha, tol, max_iter)
-        out_conv.append(np.full(n, uniq[i], dtype=object))
-        out_kind.append(np.array([s[0] for s in nodes], dtype=object))
-        out_key.append(np.array([s[1:] for s in nodes], dtype=object))
-        out_rank.append(x)
-    yield pd.DataFrame(
-        {
-            "conv_id": np.concatenate(out_conv),
-            "kind": np.concatenate(out_kind),
-            "key": np.concatenate(out_key),
-            "rank": np.concatenate(out_rank),
-        }
-    )
-
-
 def pagerank_per_conv(
     gedges: DataFrame,
     pers: DataFrame | None = None,
     alpha: float = 0.85,
     tol: float = 1.0e-6,
     max_iter: int = 100,
-    batched: bool | None = None,
 ) -> DataFrame:
     """ranks(conv_id, kind, key, rank) for every conversation graph.
 
@@ -206,46 +145,26 @@ def pagerank_per_conv(
     paying a corpus-wide distinct shuffle first).
     pers:   optional (conv_id, kind, key, weight) personalization rows.
 
-    batched (default True when pers is None; env DEEPRANK_PR_BATCHED=0
-    forces the grouped path): hash-repartition by conv_id + mapInPandas,
-    processing every conversation in a partition from two whole-partition
-    numpy arrays. Same shuffle count (one), same per-conv float schedule;
-    it exists because applyInPandas pays its pandas/Arrow framework cost
-    per GROUP, which dominates when groups are 30-turn conversations
-    (measured ~2.4x on the 30k-conv flagship stage). The personalization
-    path keeps the cogroup formulation."""
-    if batched is None:
-        batched = pers is None and os.environ.get(
-            "DEEPRANK_PR_BATCHED", "1"
-        ) != "0"
-
+    Without pers the power iteration runs in the shared per-conversation
+    runner (operators/per_conv.py: one conv_id repartition, mapInPandas).
+    With pers it runs in a cogroup of the edges and the personalization
+    rows, per conversation; both paths index nodes the same way and run
+    the same float schedule."""
     if pers is None:
-        if batched:
-            P = int(
-                gedges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
 
-            def run_parts(batches):
-                yield from _batched_partition_pagerank(
-                    batches, alpha, tol, max_iter
-                )
+        def kernel(src_idx, dst_idx, n, _nodes):
+            p = np.full(n, 1.0 / n, dtype=np.float64)
+            return (_power_iteration(src_idx, dst_idx, n, p, alpha, tol, max_iter),)
 
-            return gedges.repartition(P, "conv_id").mapInPandas(
-                run_parts, PER_CONV_SCHEMA
-            )
+        return per_conv_map(gedges, kernel, _RANK)
 
-        def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _conv_pagerank_pdf(pdf, None, alpha, tol, max_iter)
-
-        return gedges.groupBy("conv_id").applyInPandas(run, PER_CONV_SCHEMA)
-
-    def run2(_key, edges_pdf: pd.DataFrame, pers_pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(_key, edges_pdf: pd.DataFrame, pers_pdf: pd.DataFrame) -> pd.DataFrame:
         return _conv_pagerank_pdf(edges_pdf, pers_pdf, alpha, tol, max_iter)
 
     return (
         gedges.groupBy("conv_id")
         .cogroup(pers.groupBy("conv_id"))
-        .applyInPandas(run2, PER_CONV_SCHEMA)
+        .applyInPandas(run, per_conv_schema(_RANK))
     )
 
 

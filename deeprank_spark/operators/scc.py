@@ -6,8 +6,8 @@ Reference anchor: the giant-component gate in the reference uses
 this module closes that delta:
 
 - `scc_per_conv` — exact SCCs per conversation graph: iterative Tarjan
-  inside `applyInPandas` (same one-shuffle shape as
-  components.components_per_conv). Component label = min node token of the
+  in the shared per-conversation runner (operators/per_conv.py, one
+  conv_id shuffle, like components.components_per_conv). Component label = min node token of the
   SCC, so outputs are directly comparable with the networkx oracle.
 - `scc_distributed` — one giant directed graph, forward-backward coloring
   with trimming and Fleischer-style partition refinement (Orzan-style
@@ -72,14 +72,14 @@ is bounded by the partition refinement, NOT by trimming: each round every
 
 from __future__ import annotations
 
+import time
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-import time
-
-from .components import PER_CONV_SCHEMA, _ResetDir
+from .components import _COMPONENT, _ResetDir
+from .per_conv import per_conv_map
 from .superstep import KernelRun, SuperstepCheckpointer
 
 
@@ -143,35 +143,19 @@ def scc_per_conv(gedges: DataFrame) -> DataFrame:
     nx.strongly_connected_components semantics on each conversation's
     directed graph."""
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"conv_id": [], "kind": [], "key": [], "component": []})
-        conv = pdf["conv_id"].iloc[0]
-        skey = pdf["src_kind"].astype(str) + pdf["src"].astype(str)
-        dkey = pdf["dst_kind"].astype(str) + pdf["dst"].astype(str)
-        nodes, inv = np.unique(
-            np.concatenate([skey.to_numpy(), dkey.to_numpy()]), return_inverse=True
-        )
-        m = len(pdf)
-        n = len(nodes)
-        src, dst = inv[:m], inv[m:]
+    def kernel(src_idx, dst_idx, n, nodes):
         # linked adjacency (avoids per-vertex python lists)
         vert_head = np.full(n, -1, dtype=np.int64)
-        adj_next = np.empty(m, dtype=np.int64)
-        for i in range(m):
-            adj_next[i] = vert_head[src[i]]
-            vert_head[src[i]] = i
-        comp_min = _tarjan_components(n, dst.astype(np.int64), adj_next, vert_head)
-        comp_token = nodes[comp_min]
-        kinds = [s[0] for s in nodes]
-        keys = [s[1:] for s in nodes]
-        return pd.DataFrame(
-            {"conv_id": conv, "kind": kinds, "key": keys, "component": comp_token}
+        adj_next = np.empty(len(src_idx), dtype=np.int64)
+        for i, s in enumerate(src_idx):
+            adj_next[i] = vert_head[s]
+            vert_head[s] = i
+        comp_min = _tarjan_components(
+            n, dst_idx.astype(np.int64), adj_next, vert_head
         )
+        return (nodes[comp_min],)
 
-    return gedges.groupBy("conv_id").applyInPandas(run, PER_CONV_SCHEMA)
-
-
+    return per_conv_map(gedges, kernel, _COMPONENT)
 
 
 def _hlabel(idcol: F.Column) -> F.Column:

@@ -14,61 +14,46 @@ which keeps the wedge join skew-safe on power-law graphs.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import LongType, StructField
 
-_SEP = ""  # kind is a single char; token = kind + key parses positionally
+from .per_conv import per_conv_map
 
-PER_CONV_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("kind", StringType(), False),
-        StructField("key", StringType(), False),
-        StructField("tri_count", LongType(), False),
-    ]
-)
+_TRI_COUNT = [StructField("tri_count", LongType(), False)]
+
+
+def _triangle_counts(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
+    """Per-vertex triangle counts of the undirected simple projection."""
+    mask = a != b
+    lo = np.minimum(a[mask], b[mask])
+    hi = np.maximum(a[mask], b[mask])
+    und = np.unique(np.stack([lo, hi], axis=1), axis=0)
+    adj: list[set] = [set() for _ in range(n)]
+    for u, v in und:
+        adj[u].add(v)
+        adj[v].add(u)
+    tri = np.zeros(n, dtype=np.int64)
+    deg_order = sorted(range(n), key=lambda v: (len(adj[v]), v))
+    rank = {v: i for i, v in enumerate(deg_order)}
+    for u, v in und:
+        x, y = (u, v) if rank[u] < rank[v] else (v, u)
+        for w in adj[x]:
+            if rank[w] > rank[y] and w in adj[y]:
+                tri[x] += 1
+                tri[y] += 1
+                tri[w] += 1
+    return tri
 
 
 def triangles_per_conv(gedges: DataFrame) -> DataFrame:
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"conv_id": [], "kind": [], "key": [], "tri_count": []})
-        conv = pdf["conv_id"].iloc[0]
-        skey = pdf["src_kind"].astype(str) + pdf["src"].astype(str)
-        dkey = pdf["dst_kind"].astype(str) + pdf["dst"].astype(str)
-        nodes, inv = np.unique(
-            np.concatenate([skey.to_numpy(), dkey.to_numpy()]), return_inverse=True
-        )
-        m = len(pdf)
-        a, b = inv[:m], inv[m:]
-        mask = a != b
-        lo = np.minimum(a[mask], b[mask])
-        hi = np.maximum(a[mask], b[mask])
-        und = np.unique(np.stack([lo, hi], axis=1), axis=0)
-        n = len(nodes)
-        adj: list[set] = [set() for _ in range(n)]
-        for u, v in und:
-            adj[u].add(v)
-            adj[v].add(u)
-        tri = np.zeros(n, dtype=np.int64)
-        deg_order = sorted(range(n), key=lambda v: (len(adj[v]), v))
-        rank = {v: i for i, v in enumerate(deg_order)}
-        for u, v in und:
-            x, y = (u, v) if rank[u] < rank[v] else (v, u)
-            for w in adj[x]:
-                if rank[w] > rank[y] and w in adj[y]:
-                    tri[x] += 1
-                    tri[y] += 1
-                    tri[w] += 1
-        kinds = [s[0] for s in nodes]
-        keys = [s[1:] for s in nodes]
-        return pd.DataFrame(
-            {"conv_id": conv, "kind": kinds, "key": keys, "tri_count": tri}
-        )
+    """(conv_id, kind, key, tri_count) through the shared per-conversation
+    runner (operators/per_conv.py)."""
 
-    return gedges.groupBy("conv_id").applyInPandas(run, PER_CONV_SCHEMA)
+    def kernel(src_idx, dst_idx, n, _nodes):
+        return (_triangle_counts(src_idx, dst_idx, n),)
+
+    return per_conv_map(gedges, kernel, _TRI_COUNT)
 
 
 def triangles_distributed(

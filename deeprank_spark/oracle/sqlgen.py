@@ -536,8 +536,11 @@ def _maybe_word_nodash_sql(v: str) -> str:
         f"({v} IN ('a', 'A', '''s', 'I') "
         f"OR (regexp_matches({v}, '^[A-Z]') AND {v} LIKE '%.'))"
     )
-    punct_chars = [",", ".", "?", ";", ":", "-", "'", "(", ")", '"']
-    punct = f"({v} IN ({_inlist(punct_chars)}))"
+    # maybeWord's `w in ",.?;:-'()"` is a substring test; strpos(s, '') is 1
+    punct = (
+        f"((length({v}) > 0 AND strpos(',.?;:-''()', {v}) > 0) "
+        f"OR {v} = '\"')"
+    )
     return (
         f"({_is_word_sql(v)} OR {spec} OR {punct} "
         f"OR regexp_full_match({v}, '[0-9]+'))"

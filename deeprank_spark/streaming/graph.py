@@ -20,17 +20,20 @@ parity test pins stream-replay == batch for every prefix.
 Built on foreachBatch: per-key state stores won't do here because
 component merging is inherently CROSS-key (two previously unrelated
 keys join when an edge arrives), which applyInPandasWithState's
-key-isolated state cannot express. The forest lives as parquet next to
-the checkpoint, giving restart-safety the same way the superstep
-protocol does (write-then-swap via overwrite of a versioned dir).
+key-isolated state cannot express. The forest lives as versioned parquet
+next to the checkpoint, published with the superstep marker protocol
+(operators/superstep.py), so a crash mid-write never loses the forest.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from deeprank_spark.operators.superstep import completed_supersteps, write_marker
 
 
 def _star_forest(labels: DataFrame) -> DataFrame:
@@ -55,29 +58,46 @@ def incremental_components(
     saved forest under `state_dir`, recompute labels on the union, save
     the new forest, return (id, component). Call from foreachBatch (or
     any replay loop); idempotent per batch content.
+
+    The forest is versioned with the superstep marker protocol
+    (operators/superstep.py): batch k+1 writes forest_v<k+1>/, then
+    publishes _DONE_<k+1>. Reads take the newest marked version; an
+    unmarked version above it is a crashed write and is overwritten. A
+    crash anywhere leaves the previous forest readable, and the stream's
+    checkpoint replays the batch.
     """
     from deeprank_spark.operators.components import components_distributed
 
-    forest_path = os.path.join(state_dir, "forest")
     e = batch_edges.select("src", "dst")
-    # only a MISSING forest means "first batch" — any other read failure
-    # (corrupt file, permissions) must raise: silently restarting from an
-    # empty forest would drop every previously-seen component and emit
-    # wrong labels that look healthy
-    if os.path.isdir(forest_path):
-        prev = spark.read.parquet(forest_path)
+    done = completed_supersteps(state_dir)
+    names = os.listdir(state_dir) if os.path.isdir(state_dir) else []
+    versions = [int(n[len("forest_v"):]) for n in names if n.startswith("forest_v")]
+    # only NO forest at all means "first batch": forest dirs with no
+    # marked version are a state dir we cannot trust, and restarting
+    # from an empty forest would drop every previously-seen component
+    # and emit wrong labels that look healthy
+    if not done and any(n.startswith("forest") for n in names):
+        raise RuntimeError(
+            f"{state_dir}: forest directories but no version is marked complete"
+        )
+    k = done[-1] if done else 0
+    if done:
+        prev = spark.read.parquet(os.path.join(state_dir, f"forest_v{k}"))
         union = prev.unionByName(e)
     else:
         union = e
     labels = components_distributed(union).localCheckpoint(eager=True)
-    new_forest = _star_forest(labels)
-    # write-then-swap: land the new forest beside the old and rename via
-    # overwrite — a crashed batch leaves the previous forest intact and
-    # the stream's checkpoint replays the batch
-    tmp = os.path.join(state_dir, "_forest_next")
-    new_forest.write.mode("overwrite").parquet(tmp)
-    reread = spark.read.parquet(tmp)
-    reread.write.mode("overwrite").parquet(forest_path)
+    _star_forest(labels).write.mode("overwrite").parquet(
+        os.path.join(state_dir, f"forest_v{k + 1}")
+    )
+    write_marker(state_dir, k + 1, {"superstep": k + 1})
+    # keep the new version and the one before it
+    for v in versions:
+        if v < k:
+            marker = os.path.join(state_dir, f"_DONE_{v}")
+            if os.path.exists(marker):
+                os.remove(marker)
+            shutil.rmtree(os.path.join(state_dir, f"forest_v{v}"), ignore_errors=True)
     return labels
 
 

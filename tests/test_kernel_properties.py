@@ -1,10 +1,10 @@
 """Property-based tests (hypothesis) for the numpy kernel cores.
 
-These exercise the exact math the Spark kernels execute inside
-applyInPandas — `_power_iteration`, `_lpa_numpy`, `_union_find` — against
-the networkx / spec oracles over MANY random graphs (dangling nodes,
-self-loops, multi-edges, disconnected pieces), far beyond the fixed-seed
-Spark tests. Pure Python/numpy: no Spark session, so hundreds of examples
+These exercise the exact math the Spark kernels execute inside the
+per-conversation runner (operators/per_conv.py) — `_power_iteration`,
+`_lpa_numpy`, `_union_find` — against the networkx / spec oracles over
+MANY random graphs (dangling nodes, self-loops, multi-edges, disconnected
+pieces), far beyond the fixed-seed Spark tests. Pure Python/numpy: no Spark session, so hundreds of examples
 run in seconds.
 """
 

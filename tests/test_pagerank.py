@@ -11,6 +11,7 @@ from deeprank_spark.engine import digest as spark_digest
 from deeprank_spark.oracle import textgraph as otg
 from deeprank_spark.oracle.kernels import pagerank_nx
 from deeprank_spark.operators.pagerank import (
+    _conv_pagerank_pdf,
     pagerank_distributed,
     pagerank_per_conv,
     read_lineage,
@@ -45,23 +46,24 @@ def test_per_conv_matches_networkx(spark):
         assert n_conv == len(exp)
 
 
-def test_per_conv_batched_equals_grouped(spark):
-    # the mapInPandas partition-batched path must reproduce the grouped
-    # applyInPandas path exactly (same per-conv float schedule; only the
-    # framework framing differs)
+def test_per_conv_equals_driver_reference(spark):
+    # the per-conversation runner must reproduce _conv_pagerank_pdf applied
+    # on the driver to each conversation's collected edges (same node
+    # indexing, same float schedule; only the framing differs)
     pdf = small_transcripts(n_convs=12)
     d = spark_digest(transcripts_sdf(spark, pdf), CraftParams())
-    grouped = {
+    got = {
         (r["conv_id"], r["kind"], r["key"]): r["rank"]
-        for r in pagerank_per_conv(d.gedges, batched=False).collect()
+        for r in pagerank_per_conv(d.gedges).collect()
     }
-    batched = {
-        (r["conv_id"], r["kind"], r["key"]): r["rank"]
-        for r in pagerank_per_conv(d.gedges, batched=True).collect()
-    }
-    assert grouped.keys() == batched.keys()
-    for k, v in grouped.items():
-        assert math.isclose(batched[k], v, rel_tol=0, abs_tol=1e-12), (k, v, batched[k])
+    exp = {}
+    for _, g in d.gedges.toPandas().groupby("conv_id"):
+        ref = _conv_pagerank_pdf(g.reset_index(drop=True), None, 0.85, 1e-6, 100)
+        for r in ref.itertuples():
+            exp[(r.conv_id, r.kind, r.key)] = r.rank
+    assert got.keys() == exp.keys()
+    for k, v in exp.items():
+        assert math.isclose(got[k], v, rel_tol=0, abs_tol=1e-12), (k, v, got[k])
 
 
 def test_per_conv_personalized(spark):

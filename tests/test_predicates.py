@@ -31,6 +31,8 @@ def _words():
     # punctuation the tokenizer emits, specials, names and numbers
     words += [*",.?;:-'()", '"', "!", "...", "'s", "a", "A", "I", "i",
               "Mr.", "x.", "Qzx", "Q1", "q1", "7", "123", "12a", "''"]
+    # multi-character punctuation: maybeWord tests substrings of ",.?;:-'()"
+    words += [",.", "()", ":-", "-'"]
     return words + ["", None]
 
 
@@ -102,3 +104,20 @@ def test_predicate_build_is_constant_round_trips(spark, monkeypatch):
     monkeypatch.undo()
     assert 0 < n_clean < 50, n_clean
     assert len(calls) - n_clean < 50, len(calls)
+
+
+def test_duckdb_maybe_word_matches_reference():
+    """The DuckDB mirror of maybeWord in oracle/sqlgen.py equals the
+    row-at-a-time reference on the same inputs."""
+    import duckdb
+    import pandas as pd
+
+    from deeprank_spark.oracle.sqlgen import _maybe_word_sql
+
+    words = _words()
+    t = pd.DataFrame({"i": range(len(words)), "w": words})
+    con = duckdb.connect()
+    con.register("t", t)
+    got = dict(con.execute(f"SELECT i, {_maybe_word_sql('w')} FROM t").fetchall())
+    bad = [(w, got[i]) for i, w in enumerate(words) if _truth(got[i]) != maybe_word(w)]
+    assert not bad, bad[:20]

@@ -30,10 +30,11 @@ edge DataFrame and are pure DataFrame programs:
   `salt_hint` pre-aggregation of equal neighbor values, which is
   lossless for H-index).
 
-Scale notes (100 TB shape): all loops localCheckpoint eagerly per round
-with strong refs, same lineage discipline as pagerank.py (measured
-there); shuffles stay on the vertex id with the session's partition
-count; no collect, no Python rows.
+Scale notes (100 TB shape): all three loops are steps of the shared
+superstep loop (operators/superstep.py: one eager checkpoint per round
+with its convergence count observed on the same job, strong refs,
+periodic parquet resets); shuffles stay on the vertex id with the
+session's partition count; no collect, no Python rows.
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .components import _ResetDir
+from . import superstep
 
 
 def _undirected(edges: DataFrame, id_cols: tuple) -> DataFrame:
@@ -114,51 +115,52 @@ def kcore_distributed(
     lets an unrolled SQL oracle mirror the result exactly.
     """
     und = _undirected(edges, id_cols).localCheckpoint(eager=True)
-    kept: list[DataFrame] = [und]
-    # periodic parquet reset + kept.clear(): deep peels (hundreds of
-    # rounds on chain-of-cliques graphs) otherwise accumulate one
-    # checkpointed edge set per round in the block manager (same lineage
-    # discipline as components/pagerank; see _ResetDir)
-    rdir = _ResetDir("kcore")
-    fixed = rounds is not None
-    limit = rounds if fixed else max_rounds
-    prev_m = und.count() if not fixed else -1
-    r = 0
-    while r < limit:
-        r += 1
-        deg = (
-            und.select(F.col("u").alias("id"))
-            .union(und.select(F.col("v").alias("id")))
-            .groupBy("id")
-            .agg(F.count("*").alias("deg"))
-        )
-        keep = deg.where(F.col("deg") >= k).select("id")
-        und = (
+
+    def step(und: DataFrame, _r: int, last: dict):
+        keep = _degrees(und).where(F.col("deg") >= k).select("id")
+        nxt = (
             und.join(keep.select(F.col("id").alias("u")), "u", "left_semi")
             .join(keep.select(F.col("id").alias("v")), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
-        kept.append(und)
-        if r % 5 == 0:
-            und = rdir.reset(und, r)
-            kept.clear()
-        if not fixed:
-            m = und.count()
-            if m == prev_m:
-                break
-            prev_m = m
-    else:
-        if not fixed:
-            raise RuntimeError(f"kcore: no fixed point within {max_rounds} rounds")
-    und = rdir.finalize(und)
-    deg = (
+        return nxt, _edge_counts(last)
+
+    und = _peel(und, step, rounds, max_rounds, "kcore")
+    deg = _degrees(und).withColumnRenamed("deg", "core_deg")
+    return deg.where(F.col("core_deg") >= k)
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """(id, deg) of the canonical undirected edge set."""
+    return (
         und.select(F.col("u").alias("id"))
         .union(und.select(F.col("v").alias("id")))
         .groupBy("id")
-        .agg(F.count("*").alias("core_deg"))
+        .agg(F.count("*").alias("deg"))
     )
-    return deg.where(F.col("core_deg") >= k)
+
+
+def _edge_counts(last: dict) -> dict:
+    """The measure of a peeling round: its edge count, and the edges it
+    removed (against the previous round's count)."""
+    m = F.count(F.lit(1))
+    return {"edges": m, "removed": F.lit(last["edges"]) - m}
+
+
+def _peel(und: DataFrame, step, rounds: int | None, max_rounds: int,
+          what: str) -> DataFrame:
+    """Peel the edge set `und` round by round: `rounds=None` converges (no
+    edge removed), raising past max_rounds; `rounds=R` runs exactly R
+    rounds (peeling is idempotent at the fixed point)."""
+    fixed = rounds is not None
+    res = superstep.run(
+        und.sparkSession, step, lambda: (und, {"edges": -1 if fixed else und.count()}),
+        max_iter=rounds if fixed else max_rounds,
+        done=None if fixed else (lambda v: v["removed"] == 0),
+    )
+    if not fixed and not res.converged:
+        raise RuntimeError(f"{what}: no fixed point within {max_rounds} rounds")
+    return res.labels
 
 
 def graph_summary(edges: DataFrame, id_cols: tuple = ("src", "dst")) -> DataFrame:
@@ -404,21 +406,18 @@ def core_numbers_distributed(
     """
     und = _undirected(edges, id_cols)
     sym = _sym(und).localCheckpoint(eager=True)
-    state = sym.groupBy(F.col("s").alias("id")).agg(
-        F.count("*").cast("long").alias("h")
-    ).localCheckpoint(eager=True)
-    kept: list[DataFrame] = [state]
-    rdir = _ResetDir("corenum")  # periodic lineage reset, see kcore note
     fixed = rounds is not None
-    limit = rounds if fixed else max_rounds
     w = (
         Window.partitionBy("id")
         .orderBy(F.col("nh").desc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    r = 0
-    while r < limit:
-        r += 1
+
+    def init():
+        h0 = sym.groupBy(F.col("s").alias("id")).agg(F.count("*").cast("long").alias("h"))
+        return h0.localCheckpoint(eager=True), {}
+
+    def step(state: DataFrame, _r: int, _last: dict):
         hist = (
             sym.join(
                 state.select(F.col("id").alias("s"), F.col("h").alias("nh")), "s"
@@ -426,39 +425,25 @@ def core_numbers_distributed(
             .groupBy(F.col("d").alias("id"), "nh")
             .agg(F.count("*").alias("cnt"))
         )
-        new_state = (
+        nxt = (
             hist.withColumn("cum", F.sum("cnt").over(w))
             .groupBy("id")
-            .agg(
-                F.max(F.least(F.col("nh"), F.col("cum")))
-                .cast("long")
-                .alias("h")
-            )
-            .localCheckpoint(eager=True)
+            .agg(F.max(F.least(F.col("nh"), F.col("cum"))).cast("long").alias("h"))
         )
-        kept.append(new_state)
-        if not fixed:
-            changed = (
-                new_state.join(
-                    state.select("id", F.col("h").alias("ph")), "id"
-                )
-                .where(F.col("h") != F.col("ph"))
-                .count()
-            )
-            state = new_state
-            if changed == 0:
-                break
-        else:
-            state = new_state
-        if r % 5 == 0:
-            state = rdir.reset(state, r)
-            kept.clear()
-    else:
-        if not fixed:
-            raise RuntimeError(
-                f"core_numbers: no fixed point within {max_rounds} rounds"
-            )
-    return rdir.finalize(state).select("id", F.col("h").alias("core"))
+        if fixed:
+            return nxt, {}
+        # the changed count rides the round's own job
+        nxt = nxt.join(state.select("id", F.col("h").alias("ph")), "id")
+        return nxt, {"changed": F.count_if(F.col("h") != F.col("ph"))}
+
+    res = superstep.run(
+        sym.sparkSession, step, init, max_iter=rounds if fixed else max_rounds,
+        done=None if fixed else (lambda v: v["changed"] == 0),
+        settle=lambda frame, _v: frame.select("id", "h"),
+    )
+    if not fixed and not res.converged:
+        raise RuntimeError(f"core_numbers: no fixed point within {max_rounds} rounds")
+    return res.labels.select("id", F.col("h").alias("core"))
 
 
 def _edge_support(und: DataFrame) -> DataFrame:
@@ -557,30 +542,12 @@ def ktruss_distributed(
         raise ValueError(f"ktruss: k must be >= 2, got {k}")
     thresh = k - 2
     und = _undirected(edges, id_cols).localCheckpoint(eager=True)
-    kept: list[DataFrame] = [und]
-    rdir = _ResetDir("ktruss")
-    prev_m = und.count()
-    r = 0
-    while r < max_rounds:
-        r += 1
-        sup = _edge_support(und)
-        und = (
-            sup.where(F.col("support") >= thresh)
-            .select("u", "v")
-            .localCheckpoint(eager=True)
-        )
-        kept.append(und)
-        if r % 5 == 0:
-            und = rdir.reset(und, r)
-            kept.clear()
-        m = und.count()
-        if m == prev_m:
-            break
-        prev_m = m
-    else:
-        raise RuntimeError(f"ktruss: no fixed point within {max_rounds} rounds")
-    und = rdir.finalize(und)
-    return _edge_support(und)
+
+    def step(und: DataFrame, _r: int, last: dict):
+        nxt = _edge_support(und).where(F.col("support") >= thresh).select("u", "v")
+        return nxt, _edge_counts(last)
+
+    return _edge_support(_peel(und, step, None, max_rounds, "ktruss"))
 
 
 def conductance(

@@ -15,60 +15,13 @@ round; converges in O(diameter) rounds.
 
 from __future__ import annotations
 
-import atexit
-import os
-import shutil
-import tempfile
-import time
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField
 
 from .per_conv import per_conv_map
-from .superstep import KernelRun, SuperstepCheckpointer
-
-
-class _ResetDir:
-    """Round-trips iterative state through parquet (tmpfs when available):
-    the only true lineage-truncation point. localCheckpoint keeps the full
-    RDD lineage as its recovery path, so if the driver GC drops earlier
-    step DataFrames their blocks are evicted and later steps silently
-    recompute a doubly-referenced chain — the loops below also hold strong
-    refs to every checkpointed step between resets (see pagerank.py).
-
-    Owns ONE tempdir per run and deletes the previous round's parquet as
-    soon as the next round-trip is materialized, so long iterative jobs
-    hold at most one reset on the RAM-backed tmpfs. The LAST reset dir is
-    kept until interpreter exit (atexit): the returned DataFrame's
-    localCheckpoint keeps its lineage rooted at that parquet, so deleting
-    it eagerly would make the result unrecoverable after block loss on a
-    real cluster — bounded residue (one dir) is the price of
-    recoverability; durable runs manage their own directory."""
-
-    def __init__(self, tag: str):
-        parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        self.root = tempfile.mkdtemp(prefix=f"deeprank_{tag}_", dir=parent)
-        self._prev: str | None = None
-        atexit.register(shutil.rmtree, self.root, ignore_errors=True)
-
-    def reset(self, df: DataFrame, step: int) -> DataFrame:
-        path = os.path.join(self.root, f"s{step}")
-        df.write.mode("overwrite").parquet(path)
-        out = df.sparkSession.read.parquet(path)
-        if self._prev is not None:
-            shutil.rmtree(self._prev, ignore_errors=True)
-        self._prev = path
-        return out
-
-    def finalize(self, df: DataFrame) -> DataFrame:
-        """Pin the final state into block storage (eager localCheckpoint).
-        The last parquet dir stays on disk as the checkpoint's recovery
-        lineage; atexit removes it when the process ends."""
-        if self._prev is not None:
-            df = df.localCheckpoint(eager=True)
-        return df
+from . import superstep
 
 
 _COMPONENT = [StructField("component", StringType(), False)]
@@ -163,8 +116,6 @@ def components_distributed(
     per-round (changed, wall_ms) iteration metrics instead of the bare
     DataFrame.
     """
-    spark = edges.sparkSession
-    t0 = time.time()
     src, dst = id_cols
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = (
@@ -173,38 +124,15 @@ def components_distributed(
         .distinct()
         .cache()
     )
-    durable = checkpoint_dir is not None
-    ckpt = (
-        SuperstepCheckpointer(checkpoint_dir, run_id, ("id", "component"))
-        if durable
-        else None
-    )
-    rounds = 0
-    converged = False
-    metrics = []
-    labels = None
-    if durable and resume:
-        st, done_rounds, was_converged = ckpt.resume(spark)
-        if st is not None:
-            labels = st.select("id", "component")
-            rounds = done_rounds
-            converged = was_converged
-    if labels is None:
-        labels = (
-            e.select(F.col("a").alias("id"))
-            .union(e.select(F.col("b").alias("id")))
-            .distinct()
-            .select("id", F.col("id").alias("component"))
-            .localCheckpoint(eager=True)
-        )
 
-    kept = []  # strong refs: keep checkpoint blocks alive between resets
-    rdir = _ResetDir("cc")
-    last_written = rounds if durable and resume else -1
-    changed = None
-    while not converged and rounds < max_iter:
-        it = rounds  # absolute round index: the jump schedule keys off it
-        it0 = time.time()
+    def init():
+        verts = e.select(F.col("a").alias("id")).union(e.select(F.col("b").alias("id")))
+        return verts.distinct().select("id", F.col("id").alias("component")).localCheckpoint(
+            eager=True
+        ), {}
+
+    def step(labels: DataFrame, it: int, _last: dict):
+        # it: the absolute round index, the jump schedule keys off it
         nbr_min = (
             labels.join(sym, labels["id"] == sym["a"])
             .groupBy(sym["b"].alias("id"))
@@ -222,43 +150,18 @@ def components_distributed(
             # set and m(x) <= x, so the lookup always resolves.
             jump = m.select(F.col("id").alias("jid"), F.col("m").alias("jlbl"))
             stepped = m.join(jump, m["m"] == jump["jid"]).select(
-                "id",
-                F.col("jlbl").alias("component"),
-                (F.col("jlbl") != F.col("prev")).alias("chg"),
+                "id", F.col("jlbl").alias("component"), "prev"
             )
         else:
-            stepped = m.select(
-                "id",
-                F.col("m").alias("component"),
-                (F.col("m") != F.col("prev")).alias("chg"),
-            )
-        new = stepped.localCheckpoint(eager=True)
-        changed = new.agg(F.sum(F.col("chg").cast("long"))).first()[0] or 0
-        kept.append(new)
-        labels = new.select("id", "component")
-        rounds = it + 1
-        wall_ms = (time.time() - it0) * 1000.0
-        converged = changed == 0
-        metrics.append({"round": rounds, "changed": int(changed), "wall_ms": wall_ms})
-        if durable and (rounds % checkpoint_interval == 0 or converged):
-            labels = ckpt.write(labels, rounds, wall_ms, changed, converged)
-            last_written = rounds
-            kept.clear()
-        elif (rounds % 5) == 0:
-            labels = rdir.reset(labels, it)
-            kept.clear()
-    if durable and rounds > last_written:
-        # max_iter cap hit between checkpoints: persist the final round so a
-        # resumed run restarts here instead of replaying from the last write
-        labels = ckpt.write(
-            labels,
-            rounds,
-            metrics[-1]["wall_ms"] if metrics else 0.0,
-            changed if changed is not None else -1,
-            converged,
-        )
+            stepped = m.select("id", F.col("m").alias("component"), "prev")
+        return stepped, {"changed": F.count_if(F.col("component") != F.col("prev"))}
+
+    res = superstep.run(
+        edges.sparkSession, step, init, max_iter=max_iter,
+        done=lambda v: v["changed"] == 0,
+        settle=lambda frame, _v: frame.select("id", "component"),
+        interval=checkpoint_interval, checkpoint_dir=checkpoint_dir,
+        run_id=run_id, resume=resume,
+    )
     sym.unpersist()
-    out = labels if durable else rdir.finalize(labels)
-    if return_run:
-        return KernelRun(out, rounds, metrics, time.time() - t0, converged)
-    return out
+    return res.finish(res.labels, return_run)

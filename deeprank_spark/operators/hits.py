@@ -35,9 +35,10 @@ the a-gather of the previous hub, recomputed only where it is read (a
 durable write, the end). The normalized state is a lazy map-only
 projection of the checkpointed frame. Fixed-iteration mode (tol=0) is
 ONE driver action per superstep; convergence mode adds one shuffle-free
-scan of the materialized blocks for the L1 error. Durable checkpoints,
-lineage and bitwise resume via the shared superstep protocol
-(operators/superstep.py), like every other iterative kernel here.
+scan of the materialized blocks for the L1 error, which needs the
+normalizer that same job observes. Both kernels are steps of the shared
+superstep loop (operators/superstep.py): durable checkpoints, lineage and
+bitwise resume, like every other iterative kernel here.
 
 `hits_per_conv` runs the same schedule on every conversation graph in
 numpy, through the shared per-conversation runner (operators/per_conv.py).
@@ -45,16 +46,14 @@ numpy, through the shared per-conversation runner (operators/per_conv.py).
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField
 
-from .components import _ResetDir
+from . import superstep
 from .per_conv import per_conv_map
-from .superstep import KernelRun, SuperstepCheckpointer, pinned_plan
+from .superstep import KernelRun, pinned_plan
 
 
 _HUB_AUTH = [
@@ -94,7 +93,6 @@ def hits_distributed(
     nx._hits_python and raises on non-convergence.
     """
     spark = edges.sparkSession
-    t0 = time.time()
     src, dst = id_cols
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
 
@@ -110,16 +108,6 @@ def hits_distributed(
     else:
         m = e.count()
         P = max(4, min(default_P, m // 100_000 + 4))
-    metrics: list = []
-    durable = checkpoint_dir is not None
-    ckpt = (
-        SuperstepCheckpointer(checkpoint_dir, run_id, ("id", "hub", "auth"))
-        if durable
-        else None
-    )
-    step = 0
-    converged = False
-    err = None
     with pinned_plan(spark, P):
         # two partitionings of the same edge list: the h->a gather joins on
         # src, the a->h gather joins on dst. Renamed columns for the same
@@ -149,21 +137,7 @@ def hits_distributed(
                 state = base.select(
                     "id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth")
                 ).localCheckpoint(eager=True)
-                if return_run:
-                    return KernelRun(state, 0, [], time.time() - t0, True)
-                return state
-
-            state = None
-            if durable and resume:
-                st, done_steps, was_converged = ckpt.resume(spark)
-                if st is not None:
-                    state = st.select("id", "hub", "auth").repartition(P, "id")
-                    step = done_steps
-                    converged = was_converged
-            if state is None:
-                state = base.select(
-                    "id", F.lit(1.0 / n).alias("hub"), F.lit(0.0).alias("auth")
-                ).localCheckpoint(eager=True)
+                return KernelRun(state, 0, [], 0.0, True).finish(state, return_run)
 
             def a_gather(frame: DataFrame) -> DataFrame:
                 """(id, av): a_raw(v) = sum_{u->v} hub(u), one exchange."""
@@ -182,29 +156,27 @@ def hits_distributed(
                     )
                 return c.groupBy("id").agg(F.sum("c").alias("av"))
 
-            def with_auth(hubs: DataFrame, prev: DataFrame) -> DataFrame:
+            # the state the current hubs were gathered from
+            auth_src = None
+
+            def with_auth(hubs: DataFrame) -> DataFrame:
                 """(id, hub, auth) for a state whose auth is the a-gather of
-                `prev`'s hub, max-normalized: one more gather job, paid at a
-                durable write and at the end, never per superstep."""
-                obs = Observation(f"hits_auth_{run_id}_{step}")
+                `auth_src`'s hub, max-normalized: one more gather job, paid
+                at a durable write and at the end, never per superstep. A
+                state read back from disk carries its auth already."""
+                if "auth" in hubs.columns:
+                    return hubs
+                obs = Observation()
                 ja = (
-                    hubs.join(a_gather(prev), "id", "left")
+                    hubs.join(a_gather(auth_src), "id", "left")
                     .select("id", "hub", F.coalesce(F.col("av"), F.lit(0.0)).alias("av"))
                     .observe(obs, F.max(F.col("av")).alias("amax"))
                     .localCheckpoint(eager=True)
                 )
-                kept.append(ja)
                 amax = float(obs.get["amax"])
                 return ja.select("id", "hub", (F.col("av") / F.lit(amax)).alias("auth"))
 
-            kept = [state]
-            rdir = _ResetDir("hits")
-            last_written = step if durable and resume else -1
-            # the state the current hubs were gathered from; None while the
-            # state still carries its own auth column (initial or resumed)
-            auth_from = None
-            while not converged and step < max_iter:
-                it0 = time.time()
+            def step(state: DataFrame, _r: int, _last: dict):
                 # The superstep carries hub only. a_raw feeds just the
                 # h-gather (h uses the UNnormalized a, the nx detail), so the
                 # plan is one chain of two gathers. Producing auth in the same
@@ -217,6 +189,8 @@ def hits_distributed(
                 # a-gather, so only that one pays the two-phase pass
                 # (measured: salting both made the salted variant strictly
                 # slower on an in-hub graph — the second pass bought nothing)
+                nonlocal auth_src
+                auth_src = state
                 hraw = (
                     a_gather(state)
                     .select(F.col("id").alias("aid"), "av")
@@ -225,13 +199,9 @@ def hits_distributed(
                     .groupBy("id")
                     .agg(F.sum("c").alias("hv"))
                 )
-                # ONE materialization per superstep: the raw h sums land in
-                # an eager checkpoint with the max-normalizer riding it as an
-                # observed metric (a separate scalar aggregate would replay
-                # both gathers). The normalized state is a lazy map-only
-                # SELECT over the checkpointed frame; the L1 error is a second
-                # scan of the SAME materialized blocks (no shuffle).
-                obs = Observation(f"hits_step_{run_id}_{step + 1}")
+                # the raw h sums land in the loop's eager checkpoint with the
+                # max-normalizer riding it as an observed metric (a separate
+                # scalar aggregate would replay both gathers)
                 joined = base.join(hraw, "id", "left")
                 if tol > 0:
                     # the L1 stop criterion needs last round's hub alongside
@@ -244,72 +214,48 @@ def hits_distributed(
                     F.col("id"),
                     F.coalesce(F.col("hv"), F.lit(0.0)).alias("hv"),
                 ] + ([F.col("prev_hub")] if tol > 0 else [])
-                hs = (
-                    joined.select(*cols)
-                    .observe(obs, F.max(F.col("hv")).alias("hmax"))
-                    .localCheckpoint(eager=True)
-                )
-                hmax = float(obs.get["hmax"])
+                return joined.select(*cols), {"hmax": F.max(F.col("hv"))}
+
+            def settle(hs: DataFrame, values: dict) -> DataFrame:
+                # the normalized state is a lazy map-only SELECT over the
+                # checkpointed frame; the L1 error is a second scan of the
+                # SAME materialized blocks (no shuffle)
+                hmax = F.lit(float(values["hmax"]))
                 if tol > 0:
-                    err = float(
+                    values["l1_delta"] = float(
                         hs.agg(
-                            F.sum(
-                                F.abs(F.col("hv") / F.lit(hmax) - F.col("prev_hub"))
-                            )
+                            F.sum(F.abs(F.col("hv") / hmax - F.col("prev_hub")))
                         ).first()[0]
                     )
-                else:
-                    # fixed-iteration mode never reads the error: don't pay a
-                    # second scan per superstep just to log it
-                    err = -1.0
-                kept.append(hs)
-                auth_from = state.select("id", "hub")
-                state = hs.select("id", (F.col("hv") / F.lit(hmax)).alias("hub"))
-                step += 1
-                wall_ms = (time.time() - it0) * 1000.0
-                converged = tol > 0 and err < tol
-                metrics.append({"superstep": step, "l1_delta": err, "wall_ms": wall_ms})
-                if durable and (step % checkpoint_interval == 0 or converged):
-                    # the protocol's `changed` slot (an int) carries the L1
-                    # delta scaled to nano-resolution — a monotone convergence
-                    # signal an auditor can read off the _DONE markers
-                    state = ckpt.write(with_auth(state, auth_from), step, wall_ms,
-                                       int(err * 1e9) if err >= 0 else -1, converged)
-                    auth_from = None
-                    last_written = step
-                    kept.clear()
-                elif (step % 5) == 0:
-                    state = rdir.reset(state, step)
-                    kept.clear()
-            if auth_from is not None:
-                state = with_auth(state, auth_from)
+                return hs.select("id", (F.col("hv") / hmax).alias("hub"))
+
+            # the markers record LOOP convergence (tol>0 fixpoint) only: a
+            # tol=0 fixed-iteration run must stay resumable to a larger
+            # max_iter, so its markers never say converged
+            res = superstep.run(
+                spark, step,
+                lambda: (base.select(
+                    "id", F.lit(1.0 / n).alias("hub"), F.lit(0.0).alias("auth")
+                ).localCheckpoint(eager=True), {}),
+                max_iter=max_iter, done=lambda v: tol > 0 and v["l1_delta"] < tol,
+                settle=settle, save=with_auth, load=lambda s: s.repartition(P, "id"),
+                interval=checkpoint_interval, checkpoint_dir=checkpoint_dir,
+                run_id=run_id, resume=resume,
+            )
+            state = with_auth(res.labels)
         finally:
             e_by_src.unpersist()
             e_by_dst.unpersist()
             base.unpersist()
 
-    if durable and step > last_written:
-        # the marker records LOOP convergence (tol>0 fixpoint) only: a
-        # tol=0 fixed-iteration run must stay resumable to a larger
-        # max_iter, so its markers never say converged
-        state = ckpt.write(
-            state,
-            step,
-            metrics[-1]["wall_ms"] if metrics else 0.0,
-            int(err * 1e9) if err is not None and err >= 0 else -1,
-            converged,
-        )
     if tol <= 0:
-        converged = True
-    if not converged:
+        res.converged = True
+    if not res.converged:
         raise RuntimeError(
             f"hits_distributed: no convergence in {max_iter} supersteps "
-            f"(last l1={err})"
+            f"(last l1={res.last.get('l1_delta')})"
         )
-    out = _sum_normalized(state if durable else rdir.finalize(state))
-    if return_run:
-        return KernelRun(out, step, metrics, time.time() - t0, converged)
-    return out
+    return res.finish(_sum_normalized(state), return_run)
 
 
 def hits_per_conv(gedges: DataFrame, max_iter: int = 100, tol: float = 1.0e-8) -> DataFrame:
@@ -378,7 +324,6 @@ def eigenvector_distributed(
     differential test at 1e-8).
     """
     spark = edges.sparkSession
-    t0 = time.time()
     src, dst = id_cols
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     verts = (
@@ -392,16 +337,6 @@ def eigenvector_distributed(
     else:
         m = e.count()
         P = max(4, min(default_P, m // 100_000 + 4))
-    durable = checkpoint_dir is not None
-    ckpt = (
-        SuperstepCheckpointer(checkpoint_dir, run_id, ("id", "x"))
-        if durable
-        else None
-    )
-    metrics: list = []
-    step = 0
-    converged = False
-    err = None
     with pinned_plan(spark, P):
         e_by_src = (
             e.select(F.col("src").alias("es"), F.col("dst").alias("ed"))
@@ -415,25 +350,9 @@ def eigenvector_distributed(
             n = base.count()
             if n == 0:
                 out = base.select("id", F.lit(0.0).alias("centrality"))
-                return KernelRun(out, 0, [], time.time() - t0, True) if return_run else out
+                return KernelRun(out, 0, [], 0.0, True).finish(out, return_run)
 
-            state = None
-            if durable and resume:
-                st, done_steps, was_converged = ckpt.resume(spark)
-                if st is not None:
-                    state = st.select("id", "x").repartition(P, "id")
-                    step = done_steps
-                    converged = was_converged
-            if state is None:
-                state = base.select("id", F.lit(1.0 / n).alias("x")).localCheckpoint(
-                    eager=True
-                )
-
-            kept = [state]
-            rdir = _ResetDir("eig")
-            last_written = step if durable and resume else -1
-            while not converged and step < max_iter:
-                it0 = time.time()
+            def step(state: DataFrame, _r: int, _last: dict):
                 contrib = (
                     state.select(F.col("id").alias("sid"), "x")
                     .join(e_by_src, F.col("sid") == F.col("es"))
@@ -448,7 +367,6 @@ def eigenvector_distributed(
                         .agg(F.sum("c").alias("c"))
                     )
                 summed = contrib.groupBy("id").agg(F.sum("c").alias("c"))
-                obs = Observation(f"eig_step_{run_id}_{step + 1}")
                 raw = (
                     base.join(summed, "id", "left")
                     .join(state.select("id", F.col("x").alias("prev")), "id")
@@ -459,47 +377,32 @@ def eigenvector_distributed(
                         ),
                         "prev",
                     )
-                    .observe(obs, F.sum(F.col("raw") * F.col("raw")).alias("ss"))
-                    .localCheckpoint(eager=True)
                 )
-                norm = float(obs.get["ss"]) ** 0.5 or 1.0
-                err = float(
-                    raw.agg(
-                        F.sum(F.abs(F.col("raw") / F.lit(norm) - F.col("prev")))
-                    ).first()[0]
+                return raw, {"ss": F.sum(F.col("raw") * F.col("raw"))}
+
+            def settle(raw: DataFrame, values: dict) -> DataFrame:
+                norm = F.lit(float(values["ss"]) ** 0.5 or 1.0)
+                values["l1_delta"] = float(
+                    raw.agg(F.sum(F.abs(F.col("raw") / norm - F.col("prev")))).first()[0]
                 )
-                kept.append(raw)
-                state = raw.select("id", (F.col("raw") / F.lit(norm)).alias("x"))
-                step += 1
-                wall_ms = (time.time() - it0) * 1000.0
-                converged = err < n * tol
-                metrics.append({"superstep": step, "l1_delta": err, "wall_ms": wall_ms})
-                if durable and (step % checkpoint_interval == 0 or converged):
-                    state = ckpt.write(state, step, wall_ms, int(err * 1e9), converged)
-                    last_written = step
-                    kept.clear()
-                elif (step % 5) == 0:
-                    state = rdir.reset(state, step)
-                    kept.clear()
+                return raw.select("id", (F.col("raw") / norm).alias("x"))
+
+            res = superstep.run(
+                spark, step,
+                lambda: (base.select("id", F.lit(1.0 / n).alias("x")).localCheckpoint(
+                    eager=True
+                ), {}),
+                max_iter=max_iter, done=lambda v: v["l1_delta"] < n * tol,
+                settle=settle, load=lambda s: s.repartition(P, "id"),
+                interval=checkpoint_interval, checkpoint_dir=checkpoint_dir,
+                run_id=run_id, resume=resume,
+            )
         finally:
             e_by_src.unpersist()
             base.unpersist()
-    if durable and step > last_written:
-        state = ckpt.write(
-            state,
-            step,
-            metrics[-1]["wall_ms"] if metrics else 0.0,
-            int(err * 1e9) if err is not None else -1,
-            converged,
-        )
-    if not converged:
+    if not res.converged:
         raise RuntimeError(
             f"eigenvector_distributed: no convergence in {max_iter} supersteps "
-            f"(last l1={err})"
+            f"(last l1={res.last.get('l1_delta')})"
         )
-    out = (state if durable else rdir.finalize(state)).select(
-        "id", F.col("x").alias("centrality")
-    )
-    if return_run:
-        return KernelRun(out, step, metrics, time.time() - t0, converged)
-    return out
+    return res.finish(res.labels.select("id", F.col("x").alias("centrality")), return_run)

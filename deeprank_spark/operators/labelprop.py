@@ -9,13 +9,12 @@ can 2-cycle on bipartite structures, the cap bounds it).
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField
 
+from . import superstep
 from .per_conv import per_conv_map
 
 _LABEL = [StructField("label", StringType(), False)]
@@ -86,8 +85,6 @@ def lpa_distributed(
     reproduces the uninterrupted labels exactly. `return_run=True` wraps
     the result in a KernelRun with per-round (changed, wall_ms) metrics.
     """
-    spark = edges.sparkSession
-    t0 = time.time()
     src, dst = id_cols
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = (
@@ -96,41 +93,14 @@ def lpa_distributed(
         .distinct()
         .cache()
     )
-    from .components import _ResetDir
-    from .superstep import KernelRun, SuperstepCheckpointer
 
-    durable = checkpoint_dir is not None
-    ckpt = (
-        SuperstepCheckpointer(checkpoint_dir, run_id, ("id", "label"))
-        if durable
-        else None
-    )
-    rounds = 0
-    converged = False
-    metrics = []
-    labels = None
-    if durable and resume:
-        st, done_rounds, was_converged = ckpt.resume(spark)
-        if st is not None:
-            labels = st.select("id", "label")
-            rounds = done_rounds
-            converged = was_converged
-    if labels is None:
-        labels = (
-            e.select(F.col("a").alias("id"))
-            .union(e.select(F.col("b").alias("id")))
-            .distinct()
-            .select("id", F.col("id").alias("label"))
-            .localCheckpoint(eager=True)
-        )
+    def init():
+        verts = e.select(F.col("a").alias("id")).union(e.select(F.col("b").alias("id")))
+        return verts.distinct().select("id", F.col("id").alias("label")).localCheckpoint(
+            eager=True
+        ), {}
 
-    kept = []  # strong refs: keep checkpoint blocks alive between resets
-    rdir = _ResetDir("lpa")
-    last_written = rounds if durable and resume else -1
-    changed = None
-    while not converged and rounds < max_iter:
-        it = rounds
-        it0 = time.time()
+    def step(labels: DataFrame, _it: int, _last: dict):
         hist = (
             labels.join(sym, labels["id"] == sym["a"])
             .groupBy(sym["b"].alias("id"), F.col("label"))
@@ -141,43 +111,21 @@ def lpa_distributed(
                 "new_label"
             )
         )
-        new = (
-            labels.join(win, "id", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
-                (F.coalesce(F.col("new_label"), F.col("label")) != F.col("label")).alias(
-                    "chg"
-                ),
-            )
-            .localCheckpoint(eager=True)
+        new = labels.join(win, "id", "left").select(
+            "id",
+            F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
+            F.col("label").alias("prev"),
         )
-        changed = new.agg(F.sum(F.col("chg").cast("long"))).first()[0] or 0
-        kept.append(new)
-        labels = new.select("id", "label")
-        rounds = it + 1
-        wall_ms = (time.time() - it0) * 1000.0
-        converged = changed == 0
-        metrics.append({"round": rounds, "changed": int(changed), "wall_ms": wall_ms})
-        if durable and (rounds % checkpoint_interval == 0 or converged):
-            labels = ckpt.write(labels, rounds, wall_ms, changed, converged)
-            last_written = rounds
-            kept.clear()
-        elif (rounds % 5) == 0:
-            labels = rdir.reset(labels, it)
-            kept.clear()
-    if durable and rounds > last_written:
-        # max_iter cap hit between checkpoints (sync LPA can 2-cycle, the
-        # cap is part of the spec): persist the final round for resume
-        labels = ckpt.write(
-            labels,
-            rounds,
-            metrics[-1]["wall_ms"] if metrics else 0.0,
-            changed if changed is not None else -1,
-            converged,
-        )
+        return new, {"changed": F.count_if(F.col("label") != F.col("prev"))}
+
+    # sync LPA can 2-cycle, the max_iter cap is part of the spec: a capped
+    # durable run persists its last round for resume
+    res = superstep.run(
+        edges.sparkSession, step, init, max_iter=max_iter,
+        done=lambda v: v["changed"] == 0,
+        settle=lambda frame, _v: frame.select("id", "label"),
+        interval=checkpoint_interval, checkpoint_dir=checkpoint_dir,
+        run_id=run_id, resume=resume,
+    )
     sym.unpersist()
-    out = labels if durable else rdir.finalize(labels)
-    if return_run:
-        return KernelRun(out, rounds, metrics, time.time() - t0, converged)
-    return out
+    return res.finish(res.labels, return_run)

@@ -31,25 +31,15 @@ Two physical strategies for one logical kernel:
 
 from __future__ import annotations
 
-import atexit
-import os
-import shutil
-import tempfile
-import time
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import DoubleType, StructField
 
+from . import superstep
 from .per_conv import per_conv_map, per_conv_schema
-from .superstep import (
-    completed_supersteps,
-    pinned_plan,
-    read_marker,
-    write_marker,
-)
+from .superstep import pinned_plan
 
 _RANK = [StructField("rank", DoubleType(), False)]
 
@@ -173,24 +163,6 @@ def pagerank_per_conv(
 # ---------------------------------------------------------------------------
 
 
-def _lineage_rows(state: DataFrame, superstep: int, wall_ms: float) -> DataFrame:
-    return (
-        state.select(
-            F.spark_partition_id().alias("partition_id"),
-            F.xxhash64("id", F.format_number("rank", 12)).alias("h"),
-        )
-        .groupBy("partition_id")
-        .agg(F.count("*").alias("rows"), F.expr("bit_xor(h)").alias("checksum"))
-        .select(
-            F.lit(superstep).alias("superstep"),
-            "partition_id",
-            "rows",
-            "checksum",
-            F.lit(float(wall_ms)).alias("wall_ms"),
-        )
-    )
-
-
 class PageRankRun:
     """Result handle: final ranks + iteration metrics."""
 
@@ -262,7 +234,6 @@ def pagerank_distributed(
     NOT re-entrant on a shared SparkSession (see pinned_plan).
     """
     spark = edges.sparkSession
-    t0 = time.time()
     src, dst = id_cols
     weighted = weight_col is not None
     e = edges.select(
@@ -367,60 +338,12 @@ def pagerank_distributed(
                 base.select("id", "p", "dangling"), "id"
             )
 
-        # Superstep state management (measured, not guessed — see git history):
-        # each step eager-localCheckpoints the new state (constant logical-plan
-        # depth), BUT Spark's local checkpoint keeps the full RDD lineage as its
-        # recovery path — if the driver GC drops an old step's DataFrame, the
-        # ContextCleaner evicts its blocks and every later step silently
-        # recomputes a doubly-referenced chain (wall time doubles per step).
-        # So (a) strong references to every checkpointed state are held in
-        # `kept` between resets, and (b) every checkpoint_interval steps the
-        # state is round-tripped through parquet, which genuinely truncates
-        # lineage and lets the old blocks be freed. Non-durable runs round-trip
-        # through a tempdir; durable runs additionally write the per-partition
-        # lineage table + _DONE markers for resume.
-        durable = checkpoint_dir is not None
-        if not durable:
-            # RAM-backed tempdir when available: the non-durable round-trip is
-            # only a lineage truncation point, it doesn't need to survive
-            tmp_parent = "/dev/shm" if os.path.isdir("/dev/shm") else None
-            checkpoint_dir = tempfile.mkdtemp(prefix="deeprank_pr_", dir=tmp_parent)
-        ckpt_base = os.path.join(checkpoint_dir, run_id)
-        os.makedirs(ckpt_base, exist_ok=True)
-        start_step = 0
-        state = None
-        done = completed_supersteps(ckpt_base) if resume and durable else []
-        if done:
-            start_step = max(done)
-            rank_schema = StructType(
-                [vdeg.schema["id"], StructField("rank", DoubleType())]
-            )
-            state = with_base(spark.read.schema(rank_schema).parquet(
-                os.path.join(ckpt_base, f"superstep={start_step}")
-            ))
-            dm = read_marker(ckpt_base, start_step).get("dangling_mass")
-            if dm is None:  # a marker written before it carried the mass
-                dm = state.where("dangling").agg(F.sum("rank")).first()[0] or 0.0
-        else:
-            state = base.select("id", F.lit(1.0 / n).alias("rank"), "p", "dangling")
-            dm = int(stats["n_dangling"]) / n  # every vertex starts at 1/n
-
         if weighted:
             contrib = F.col("rank") * F.col("e_w") / F.col("e_deg")
         else:
             contrib = F.col("rank") / F.col("e_deg")
-        err_metric = F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("err")
-        dm_metric = F.sum(
-            F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)
-        ).alias("dm")
-        deltas = []
-        converged = False
-        step = start_step
-        kept = []  # strong refs: keep checkpoint blocks alive between resets
-        prev_ckpt = None  # non-durable: last superstep dir kept on tmpfs
-        while step < max_iter:
-            step += 1
-            it0 = time.time()
+
+        def step(state: DataFrame, _r: int, last: dict):
             gathered = state.join(edges_deg, F.col("id") == F.col("e_src"))
             c = contrib
             if salt_buckets > 1:
@@ -435,112 +358,55 @@ def pagerank_distributed(
             summed = gathered.groupBy(F.col("e_dst").alias("id")).agg(
                 F.sum(c).alias("c")
             )
-            obs = Observation(f"pr_step_{run_id}_{step}")
-            state = (
-                state.join(summed, "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.lit(alpha)
-                        * (F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(float(dm)) * F.col("p"))
-                        + F.lit(1.0 - alpha) * F.col("p")
-                    ).alias("rank"),
-                    "p",
-                    "dangling",
-                    F.col("rank").alias("prev"),
-                )
-                .observe(obs, err_metric, dm_metric)
-                # EAGER local checkpoint: truncates logical plan AND rdd
-                # lineage at materialization, and the one job of the
-                # superstep. Eager matters: a lazy localCheckpoint
-                # materialized through a downstream action does NOT
-                # truncate lineage, so when the driver GC drops old step
-                # DataFrames their blocks vanish and later steps
-                # cascade-recompute from scratch.
-                .localCheckpoint(eager=True)
+            dm = F.lit(float(last["dangling_mass"] or 0.0))
+            nxt = state.join(summed, "id", "left").select(
+                "id",
+                (
+                    F.lit(alpha) * (F.coalesce(F.col("c"), F.lit(0.0)) + dm * F.col("p"))
+                    + F.lit(1.0 - alpha) * F.col("p")
+                ).alias("rank"),
+                "p",
+                "dangling",
+                F.col("rank").alias("prev"),
             )
-            row = obs.get
-            err, dm = float(row["err"]), float(row["dm"] or 0.0)
-            kept.append(state)
-            wall_ms = (time.time() - it0) * 1000.0
-            deltas.append({"superstep": step, "l1_delta": err, "wall_ms": wall_ms})
+            return nxt, {
+                "l1_delta": F.sum(F.abs(F.col("rank") - F.col("prev"))),
+                "dangling_mass": F.sum(
+                    F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)
+                ),
+            }
+
+        def settle(state: DataFrame, v: dict) -> DataFrame:
             if verbose:
-                print(f"[pagerank] step={step} l1={err:.3e} wall_ms={wall_ms:.0f}", flush=True)
-            converged = tol > 0 and err < n * tol
+                print(f"[pagerank] l1={v['l1_delta']:.3e}", flush=True)
+            return state
 
-            if step % checkpoint_interval == 0 or converged:
-                ranks = _write_superstep(
-                    state.select("id", "rank"), ckpt_base, step, wall_ms, dm,
-                    durable=durable,
-                )
-                kept.clear()  # parquet re-read is lineage-free: old blocks can go
-                if not durable:
-                    # non-durable runs are lineage resets, not recovery
-                    # points: once the new round-trip exists the previous
-                    # superstep dir on tmpfs is dead weight — delete it
-                    if prev_ckpt is not None:
-                        shutil.rmtree(prev_ckpt, ignore_errors=True)
-                    prev_ckpt = os.path.join(ckpt_base, f"superstep={step}")
-                if converged:
-                    state = ranks
-                    break
-                state = with_base(ranks)
-
-    if tol <= 0:
-        # fixed-iteration mode: exactly max_iter supersteps, deterministic
-        # superstep count (what a SQL-unrolled differential oracle needs)
-        converged = True
-    if not converged:
-        if not durable:
-            shutil.rmtree(checkpoint_dir, ignore_errors=True)
-        raise RuntimeError(f"pagerank_distributed: no convergence in {max_iter} supersteps")
-    ranks = state.select("id", "rank")
-    if not durable:
-        # pin the final state into block storage; the last superstep dir
-        # stays on tmpfs until interpreter exit (atexit) because it is the
-        # checkpoint's lineage recovery path — deleting it eagerly would
-        # make run.ranks unrecoverable after executor block loss. Earlier
-        # superstep dirs were already deleted incrementally in the loop.
-        ranks = ranks.localCheckpoint(eager=True)
-        atexit.register(shutil.rmtree, checkpoint_dir, ignore_errors=True)
-    return PageRankRun(ranks, step, deltas, time.time() - t0, converged)
-
-
-def _write_superstep(
-    ranks: DataFrame,
-    ckpt_base: str,
-    step: int,
-    wall_ms: float,
-    dangling_mass: float,
-    durable: bool,
-) -> DataFrame:
-    """Parquet round-trip of (id, rank): the real lineage truncation point.
-    Durable runs also append the per-partition lineage table and a _DONE
-    marker carrying the state's dangling mass (resume scans the markers).
-    Durable state lands SORTED on id within each (hash) partition file, so
-    row-group min/max stats let a point lookup of one vertex's rank at a
-    checkpointed superstep prune to ~one row group per file. Deliberately
-    NOT repartitionByRange: the range partitioner samples boundaries with
-    an RDD-id-seeded RNG, so its layout varies between runs of identical
-    data and demotes the cross-run bitwise-resume guarantee to ~1e-18
-    float wiggle (measured); hash partitioning + in-file sort is fully
-    value-determined."""
-    path = os.path.join(ckpt_base, f"superstep={step}")
-    if durable:
-        ranks.sortWithinPartitions("id").write.mode("overwrite").parquet(path)
-        _lineage_rows(ranks, step, wall_ms).write.mode("append").parquet(
-            os.path.join(ckpt_base, "lineage")
+        # Each superstep is the loop's eager localCheckpoint of the new
+        # state — ONE job, with the (L1 delta, dangling mass) read riding
+        # it as observed metrics — and every checkpoint_interval supersteps
+        # the state round-trips through parquet. The durable form is
+        # exactly (id, rank), rejoined with `base` on the way back in; its
+        # marker carries the dangling mass, which is all a resumed
+        # superstep needs besides the ranks.
+        res = superstep.run(
+            spark, step,
+            lambda: (
+                base.select("id", F.lit(1.0 / n).alias("rank"), "p", "dangling"),
+                # every vertex starts at 1/n
+                {"dangling_mass": int(stats["n_dangling"]) / n},
+            ),
+            max_iter=max_iter, done=lambda v: tol > 0 and v["l1_delta"] < n * tol,
+            settle=settle, save=lambda s: s.select("id", "rank"), load=with_base,
+            interval=checkpoint_interval, checkpoint_dir=checkpoint_dir,
+            run_id=run_id, resume=resume,
         )
-        write_marker(ckpt_base, step, {
-            "superstep": step, "wall_ms": wall_ms, "dangling_mass": dangling_mass,
-        })
-    else:
-        # non-durable resets are pure lineage truncation on tmpfs: nothing
-        # ever point-reads these
-        ranks.write.mode("overwrite").parquet(path)
-    # the schema is known: reading without it runs a schema-inference job
-    return ranks.sparkSession.read.schema(ranks.schema).parquet(path)
 
-
-def read_lineage(spark: SparkSession, checkpoint_dir: str, run_id: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(checkpoint_dir, run_id, "lineage"))
+    # fixed-iteration mode (tol=0): exactly max_iter supersteps, a
+    # deterministic superstep count (what a SQL-unrolled differential
+    # oracle needs)
+    converged = res.converged or tol <= 0
+    if not converged:
+        raise RuntimeError(f"pagerank_distributed: no convergence in {max_iter} supersteps")
+    return PageRankRun(
+        res.labels.select("id", "rank"), res.rounds, res.metrics, res.wall_s, converged
+    )

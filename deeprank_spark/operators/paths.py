@@ -3,8 +3,8 @@
 Beyond-reference link-graph kernel on the same superstep skeleton as
 components/scc: distance relaxation is a hash-MIN exchange over dist+1.
 Converges in O(eccentricity(source)) rounds; each round is one shuffle on
-the vertex id plus the usual eager-checkpoint + periodic parquet reset
-lineage discipline (_ResetDir, measured in pagerank.py).
+the vertex id and one job, a step of the shared superstep loop
+(operators/superstep.py: eager checkpoint, periodic parquet reset).
 
 Semantics = nx.single_source_shortest_path_length on the undirected
 simple projection (directed=False) or the directed graph (directed=True);
@@ -13,22 +13,11 @@ unreachable vertices are absent, matching networkx.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .components import _ResetDir
-from .superstep import KernelRun, SuperstepCheckpointer
-
-
-def _frontier_state(dist: DataFrame, frontier: DataFrame) -> DataFrame:
-    """One durable frame for a (dist map, frontier) pair: (id, dist,
-    frontier bool). The frontier is always a subset of the dist map with
-    the map's own dist values, so the pair round-trips losslessly."""
-    return dist.join(
-        frontier.select("id", F.lit(True).alias("frontier")), "id", "left"
-    ).select("id", "dist", F.coalesce("frontier", F.lit(False)).alias("frontier"))
+from . import superstep
+from .superstep import KernelRun
 
 
 def sssp_distributed(
@@ -59,89 +48,38 @@ def sssp_distributed(
     if not directed:
         e = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     e = e.where(F.col("a") != F.col("b")).distinct().localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    t0 = time.time()
 
-    durable = checkpoint_dir is not None
-    ckpt = (
-        SuperstepCheckpointer(checkpoint_dir, run_id, ("id", "dist", "frontier"))
-        if durable
-        else None
-    )
-    rounds = 0
-    converged = False
-    metrics = []
-    dist = frontier = None
-    if durable and resume:
-        st, done_rounds, was_converged = ckpt.resume(spark)
-        if st is not None:
-            dist = st.select("id", "dist")
-            frontier = st.where("frontier").select("id", "dist")
-            rounds = done_rounds
-            converged = was_converged
-    if dist is None:
-        dist = spark.createDataFrame(
-            [(source, 0)], "id long, dist int"
-        ).localCheckpoint(eager=True)
-        # frontier-based BFS: each round relaxes only the edges leaving the
+    def step(state: DataFrame, _r: int, _last: dict):
+        # frontier-based BFS: a round relaxes only the edges leaving the
         # vertices discovered last round (unweighted => a settled vertex
-        # never improves), so per-round cost is O(frontier out-degree),
-        # not O(|V|)
-        frontier = dist
-
-    kept = [dist]
-    rdir = _ResetDir("sssp")
-    last_written = rounds if durable and resume else -1
-    n_new = None
-    while not converged and rounds < max_iter:
-        it0 = time.time()
+        # never improves, so only unseen vertices join the frontier)
+        front = state.where("frontier")
         cand = (
-            frontier.join(e, frontier["id"] == e["a"])
+            front.join(e, front["id"] == e["a"])
             .groupBy(e["b"].alias("id"))
-            .agg((F.min("dist") + 1).alias("dist"))
+            .agg((F.min("dist") + 1).alias("nd"))
         )
-        frontier = cand.join(dist, "id", "leftanti").localCheckpoint(eager=True)
-        n_new = frontier.count()
-        if n_new > 0:
-            dist = dist.union(frontier).localCheckpoint(eager=True)
-            kept.append(dist)
-            kept.append(frontier)
-        rounds += 1
-        wall_ms = (time.time() - it0) * 1000.0
-        converged = n_new == 0
-        metrics.append({"round": rounds, "new": int(n_new), "wall_ms": wall_ms})
-        if durable and (rounds % checkpoint_interval == 0 or converged):
-            st = ckpt.write(
-                _frontier_state(dist, frontier), rounds, wall_ms, n_new, converged
-            )
-            dist = st.select("id", "dist")
-            frontier = st.where("frontier").select("id", "dist")
-            last_written = rounds
-            kept.clear()
-        elif (rounds % 5) == 0:
-            dist = rdir.reset(dist, rounds)
-            kept.clear()
-            kept.append(frontier)
-    if not converged:
-        if durable and rounds > last_written:
-            # persist the in-flight frontier so a resume with a larger
-            # budget continues the search instead of restarting
-            ckpt.write(
-                _frontier_state(dist, frontier),
-                rounds,
-                metrics[-1]["wall_ms"] if metrics else 0.0,
-                n_new if n_new is not None else -1,
-                False,
-            )
-        # refuse-to-mislabel policy (same as scc_distributed): a truncated
-        # distance map is indistinguishable from "unreachable" downstream
-        raise RuntimeError(
-            f"sssp: frontier non-empty after {max_iter} rounds; raise max_iter"
+        nxt = state.join(cand, "id", "full").select(
+            "id",
+            F.coalesce("dist", "nd").alias("dist"),
+            F.col("dist").isNull().alias("frontier"),
         )
-    out = dist if durable else rdir.finalize(dist)
-    if return_run:
-        return KernelRun(out, rounds, metrics, time.time() - t0, converged)
-    return out
+        return nxt, {"new": F.count_if("frontier")}
+
+    spark = edges.sparkSession
+    res = superstep.run(
+        spark, step,
+        lambda: (spark.createDataFrame([(source, 0, True)], "id long, dist int, frontier boolean"), {}),
+        max_iter=max_iter, done=lambda v: v["new"] == 0,
+        interval=checkpoint_interval, checkpoint_dir=checkpoint_dir,
+        run_id=run_id, resume=resume,
+    )
+    if not res.converged:
+        # refuse-to-mislabel: a truncated distance map is indistinguishable
+        # from "unreachable" downstream; a durable run persisted its last
+        # round, so a resume with a larger max_iter continues the search
+        raise RuntimeError(f"sssp: frontier non-empty after {max_iter} rounds; raise max_iter")
+    return res.finish(res.labels.select("id", "dist"), return_run)
 
 
 def wsssp_distributed(
@@ -172,10 +110,11 @@ def wsssp_distributed(
     reaches the same fixpoint, so `delta` affects round count and wasted
     work only, never the result; `delta=None` uses the mean edge weight.
 
-    Per round: one scalar agg (bucket bound) + one shuffle on the vertex id
-    (relax) + one merge join, under the same eager-checkpoint `_ResetDir`
-    lineage discipline as the other kernels. Raises (refuse-to-mislabel)
-    if the frontier is still non-empty after max_iter rounds.
+    Per round: one job — a shuffle on the vertex id (relax) and one merge
+    join, checkpointed by the shared superstep loop; the next bucket's
+    bound (the frontier's min distance) is observed on the same job.
+    Raises (refuse-to-mislabel) if the frontier is still non-empty after
+    max_iter rounds.
 
     Durable runs: same protocol as sssp_distributed — (id, dist, frontier)
     persisted every `checkpoint_interval` rounds and before the budget
@@ -205,108 +144,50 @@ def wsssp_distributed(
         raise ValueError(f"wsssp: weights must be > 0, found min weight {wmin}")
     if delta is None:
         delta = float(wavg or 1.0)
-    spark = edges.sparkSession
-    t0 = time.time()
 
-    durable = checkpoint_dir is not None
-    ckpt = (
-        SuperstepCheckpointer(checkpoint_dir, run_id, ("id", "dist", "frontier"))
-        if durable
-        else None
-    )
-    rounds = 0
-    converged = False
-    metrics = []
-    dist = frontier = None
-    if durable and resume:
-        st, done_rounds, was_converged = ckpt.resume(spark)
-        if st is not None:
-            dist = st.select("id", "dist")
-            frontier = st.where("frontier").select("id", "dist")
-            rounds = done_rounds
-            converged = was_converged
-    if dist is None:
-        dist = spark.createDataFrame(
-            [(source, 0.0)], "id long, dist double"
-        ).localCheckpoint(eager=True)
-        # frontier = vertices whose tentative dist improved since last
-        # expansion
-        frontier = dist
-
-    kept = [dist]
-    # one _ResetDir per state frame: a reset dir is deleted when ITS OWN
-    # next reset lands, so two frames sharing one rotation would delete
-    # each other's still-referenced parquet
-    rdir = _ResetDir("wsssp")
-    rdir_f = _ResetDir("wsssp_frontier")
-    last_written = rounds if durable and resume else -1
-    n_front = None
-    while not converged and rounds < max_iter:
-        it0 = time.time()
-        bound_row = frontier.agg(F.min("dist")).first()[0]
-        if bound_row is None:  # resumed state with an empty frontier
-            converged = True
-            break
-        bound = bound_row + delta
-        bucket = frontier.where(F.col("dist") < bound)
-        rest = frontier.where(F.col("dist") >= bound)
+    def step(state: DataFrame, _r: int, last: dict):
+        # expand only the frontier vertices inside the bucket [B, B+delta),
+        # B = the frontier's min tentative distance (observed last round)
+        bound = last["frontier_min"] + delta
+        bucket = state.where(F.col("frontier") & (F.col("dist") < bound))
         relaxed = (
             bucket.join(e, bucket["id"] == e["a"])
             .groupBy(e["b"].alias("id"))
             .agg(F.min(F.col("dist") + F.col("w")).alias("nd"))
         )
-        merged = dist.join(relaxed, "id", "full").select(
+        improved = F.col("nd").isNotNull() & (
+            F.col("dist").isNull() | (F.col("nd") < F.col("dist"))
+        )
+        nxt = state.join(relaxed, "id", "full").select(
             "id",
             F.least(
                 F.coalesce(F.col("dist"), F.lit(float("inf"))),
                 F.coalesce(F.col("nd"), F.lit(float("inf"))),
             ).alias("dist"),
-            (
-                F.col("dist").isNull() | (F.col("nd") < F.col("dist"))
-            ).alias("improved"),
-        ).localCheckpoint(eager=True)
-        dist = merged.select("id", "dist")
-        improved = merged.where("improved").select("id")
-        frontier = rest.select("id").join(
-            improved, "id", "leftanti"
-        ).unionByName(improved).join(dist, "id").localCheckpoint(eager=True)
-        n_front = frontier.count()
-        kept.append(merged)
-        kept.append(frontier)
-        rounds += 1
-        wall_ms = (time.time() - it0) * 1000.0
-        converged = n_front == 0
-        metrics.append({"round": rounds, "frontier": int(n_front), "wall_ms": wall_ms})
-        if durable and (rounds % checkpoint_interval == 0 or converged):
-            st = ckpt.write(
-                _frontier_state(dist, frontier), rounds, wall_ms, n_front, converged
-            )
-            dist = st.select("id", "dist")
-            frontier = st.where("frontier").select("id", "dist")
-            last_written = rounds
-            kept.clear()
-        elif (rounds % 5) == 0:
-            dist = rdir.reset(dist, rounds)
-            frontier = rdir_f.reset(frontier, rounds)
-            kept.clear()
-            kept.append(dist)
-            kept.append(frontier)
-    if not converged:
-        if durable and rounds > last_written:
-            ckpt.write(
-                _frontier_state(dist, frontier),
-                rounds,
-                metrics[-1]["wall_ms"] if metrics else 0.0,
-                n_front if n_front is not None else -1,
-                False,
-            )
-        raise RuntimeError(
-            f"wsssp: frontier non-empty after {max_iter} rounds; raise max_iter"
+            # the frontier: vertices whose tentative dist improved, plus
+            # the frontier vertices beyond this round's bucket
+            (improved | (F.coalesce("frontier", F.lit(False)) & (F.col("dist") >= bound)))
+            .alias("frontier"),
         )
-    out = dist if durable else rdir.finalize(dist)
-    if return_run:
-        return KernelRun(out, rounds, metrics, time.time() - t0, converged)
-    return out
+        return nxt, {
+            "frontier": F.count_if("frontier"),
+            "frontier_min": F.min(F.when(F.col("frontier"), F.col("dist"))),
+        }
+
+    spark = edges.sparkSession
+    res = superstep.run(
+        spark, step,
+        lambda: (
+            spark.createDataFrame([(source, 0.0, True)], "id long, dist double, frontier boolean"),
+            {"frontier_min": 0.0},
+        ),
+        max_iter=max_iter, done=lambda v: v["frontier"] == 0,
+        interval=checkpoint_interval, checkpoint_dir=checkpoint_dir,
+        run_id=run_id, resume=resume,
+    )
+    if not res.converged:
+        raise RuntimeError(f"wsssp: frontier non-empty after {max_iter} rounds; raise max_iter")
+    return res.finish(res.labels.select("id", "dist"), return_run)
 
 
 def diameter_double_sweep(
@@ -386,113 +267,44 @@ def temporal_reachability(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    spark = edges.sparkSession
-    t0 = time.time()
     if start_ts is None:
         start_ts = e.agg(F.min("t")).first()[0]
         if start_ts is None:
-            out = spark.createDataFrame([(source, 0)], "id long, arrival long").limit(0)
-            return (
-                KernelRun(out, 0, [], time.time() - t0, True) if return_run else out
-            )
+            out = edges.sparkSession.createDataFrame([], "id long, arrival long")
+            return KernelRun(out, 0, [], 0.0, True) if return_run else out
 
-    durable = checkpoint_dir is not None
-    ckpt = (
-        SuperstepCheckpointer(checkpoint_dir, run_id, ("id", "arrival", "frontier"))
-        if durable
-        else None
-    )
-    rounds = 0
-    converged = False
-    metrics = []
-    arr = frontier = None
-    if durable and resume:
-        st, done_rounds, was_converged = ckpt.resume(spark)
-        if st is not None:
-            arr = st.select("id", "arrival")
-            frontier = st.where("frontier").select("id", "arrival")
-            rounds = done_rounds
-            converged = was_converged
-    if arr is None:
-        arr = spark.createDataFrame(
-            [(source, int(start_ts))], "id long, arrival long"
-        ).localCheckpoint(eager=True)
-        frontier = arr
-
-    kept = [arr]
-    rdir = _ResetDir("treach")
-    last_written = rounds if durable and resume else -1
-    n_imp = None
-    while not converged and rounds < max_iter:
-        it0 = time.time()
+    def step(state: DataFrame, _r: int, _last: dict):
+        # the frontier: vertices whose arrival improved last round
+        front = state.where("frontier")
         cand = (
-            frontier.join(e, frontier["id"] == e["a"])
+            front.join(e, front["id"] == e["a"])
             .where(F.col("t") >= F.col("arrival"))
             .groupBy(e["b"].alias("id"))
             .agg(F.min("t").alias("cand"))
         )
-        improved = (
-            cand.join(arr, "id", "left")
-            .where(F.col("arrival").isNull() | (F.col("cand") < F.col("arrival")))
-            .select("id", F.col("cand").alias("arrival"))
-            .localCheckpoint(eager=True)
+        improved = F.col("cand").isNotNull() & (
+            F.col("arrival").isNull() | (F.col("cand") < F.col("arrival"))
         )
-        n_imp = improved.count()
-        if n_imp > 0:
-            arr = (
-                arr.join(improved.select("id"), "id", "left_anti")
-                .union(improved)
-                .localCheckpoint(eager=True)
-            )
-            kept.append(arr)
-            kept.append(improved)
-        frontier = improved
-        rounds += 1
-        wall_ms = (time.time() - it0) * 1000.0
-        converged = n_imp == 0
-        metrics.append({"round": rounds, "improved": int(n_imp), "wall_ms": wall_ms})
-        if durable and (rounds % checkpoint_interval == 0 or converged):
-            st = ckpt.write(
-                arr.join(
-                    frontier.select("id", F.lit(True).alias("frontier")),
-                    "id",
-                    "left",
-                ).select(
-                    "id", "arrival", F.coalesce("frontier", F.lit(False)).alias("frontier")
-                ),
-                rounds,
-                wall_ms,
-                n_imp,
-                converged,
-            )
-            arr = st.select("id", "arrival")
-            frontier = st.where("frontier").select("id", "arrival")
-            last_written = rounds
-            kept.clear()
-        elif (rounds % 5) == 0:
-            arr = rdir.reset(arr, rounds)
-            kept.clear()
-            kept.append(frontier)
-    if not converged:
-        if durable and rounds > last_written:
-            ckpt.write(
-                arr.join(
-                    frontier.select("id", F.lit(True).alias("frontier")),
-                    "id",
-                    "left",
-                ).select(
-                    "id", "arrival", F.coalesce("frontier", F.lit(False)).alias("frontier")
-                ),
-                rounds,
-                metrics[-1]["wall_ms"] if metrics else 0.0,
-                n_imp if n_imp is not None else -1,
-                False,
-            )
+        nxt = state.join(cand, "id", "full").select(
+            "id",
+            F.when(improved, F.col("cand")).otherwise(F.col("arrival")).alias("arrival"),
+            improved.alias("frontier"),
+        )
+        return nxt, {"improved": F.count_if("frontier")}
+
+    spark = edges.sparkSession
+    res = superstep.run(
+        spark, step,
+        lambda: (spark.createDataFrame(
+            [(source, int(start_ts), True)], "id long, arrival long, frontier boolean"
+        ), {}),
+        max_iter=max_iter, done=lambda v: v["improved"] == 0,
+        interval=checkpoint_interval, checkpoint_dir=checkpoint_dir,
+        run_id=run_id, resume=resume,
+    )
+    if not res.converged:
         raise RuntimeError(
             f"temporal_reachability: improvements after {max_iter} rounds; "
             "raise max_iter"
         )
-    out = arr if durable else rdir.finalize(arr)
-    if return_run:
-        return KernelRun(out, rounds, metrics, time.time() - t0, converged)
-    return out
+    return res.finish(res.labels.select("id", "arrival"), return_run)

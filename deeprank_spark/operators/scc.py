@@ -61,9 +61,11 @@ this module closes that delta:
   class's unique min-labeled vertex and bcolor(v) = label(r) iff v
   reaches r.
 
-Scale notes (100 TB shape): every fixpoint loop checkpoints eagerly per
-step with strong refs and periodic parquet resets (the `_ResetDir` lineage
-discipline measured in pagerank.py); all shuffles are on the vertex id;
+Scale notes (100 TB shape): the outer round, its trim passes and both
+label fixpoints are steps of the shared superstep loop (operators/
+superstep.py: one eager checkpoint per step with its count observed on the
+same job, strong refs, periodic parquet resets); all shuffles are on the
+vertex id;
 no collect, no per-row Python. Worst case (a long path of singleton SCCs)
 is bounded by the partition refinement, NOT by trimming: each round every
 (color, bcolor) cell recurses independently, O(log n) expected rounds
@@ -72,15 +74,13 @@ is bounded by the partition refinement, NOT by trimming: each round every
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .components import _COMPONENT, _ResetDir
+from . import superstep
+from .components import _COMPONENT
 from .per_conv import per_conv_map
-from .superstep import KernelRun, SuperstepCheckpointer
 
 
 def _tarjan_components(n: int, adj_heads: np.ndarray, adj_next: np.ndarray,
@@ -164,28 +164,21 @@ def _hlabel(idcol: F.Column) -> F.Column:
     return F.struct(F.xxhash64(idcol).alias("h"), idcol.alias("i"))
 
 
-def _minlabel_fixpoint(
-    state: DataFrame,
-    prop_e: DataFrame,
-    rdir: _ResetDir,
-    base: int,
-    max_inner: int,
-) -> DataFrame:
+def _minlabel_fixpoint(state: DataFrame, prop_e: DataFrame, max_inner: int) -> DataFrame:
     """Hash-min label exchange with pointer jumping to fixpoint.
 
     state: (id, lbl struct<h,i>); prop_e: (a, b) — labels flow a -> b.
     Jump: lbl'(v) = lbl(vertex named by lbl(v).i) — transitive within the
     reaching set. Raises if max_inner rounds don't converge (w.h.p. needs
     O(log n) under the hashed order)."""
-    state = state.localCheckpoint(eager=True)
-    kept = [state]
-    for it in range(max_inner):
+
+    def step(st: DataFrame, _r: int, _last: dict):
         msg = (
-            state.join(prop_e, state["id"] == prop_e["a"])
+            st.join(prop_e, st["id"] == prop_e["a"])
             .groupBy(prop_e["b"].alias("id"))
             .agg(F.min("lbl").alias("pmin"))
         )
-        m = state.join(msg, "id", "left").select(
+        m = st.join(msg, "id", "left").select(
             "id",
             F.least(
                 F.col("lbl"), F.coalesce(F.col("pmin"), F.col("lbl"))
@@ -193,27 +186,69 @@ def _minlabel_fixpoint(
             F.col("lbl").alias("prev"),
         )
         jump = m.select(F.col("id").alias("jid"), F.col("m").alias("jlbl"))
-        stepped = m.join(jump, m["m"]["i"] == jump["jid"]).select(
-            "id",
-            F.col("jlbl").alias("lbl"),
-            (F.col("jlbl") != F.col("prev")).alias("chg"),
+        nxt = m.join(jump, m["m"]["i"] == jump["jid"]).select(
+            "id", F.col("jlbl").alias("lbl"), "prev"
         )
-        new = stepped.localCheckpoint(eager=True)
-        changed = new.agg(F.sum(F.col("chg").cast("long"))).first()[0] or 0
-        kept.append(new)
-        state = new.select("id", "lbl")
-        if (it + 1) % 5 == 0:
-            state = rdir.reset(state, base + it)
-            kept.clear()
-        if changed == 0:
-            return state
-    raise RuntimeError(
-        f"minlabel fixpoint did not converge within {max_inner} rounds"
-    )
+        return nxt, {"changed": F.count_if(F.col("lbl") != F.col("prev"))}
 
+    res = superstep.run(
+        state.sparkSession, step, lambda: (state, {}), max_iter=max_inner,
+        done=lambda v: v["changed"] == 0,
+        settle=lambda frame, _v: frame.select("id", "lbl"),
+    )
+    if not res.converged:
+        raise RuntimeError(
+            f"minlabel fixpoint did not converge within {max_inner} rounds"
+        )
+    return res.labels
+
+
+# Outer rounds between the parquet round trips of the remainder frames:
+# every round. localCheckpoint PRESERVES the parent plan's Catalyst stats,
+# and SizeInBytesOnlyStatsPlanVisitor.visitJoin MULTIPLIES child
+# sizeInBytes as BigInt — so chaining checkpointed joins round after round
+# grows the estimate's DIGIT COUNT exponentially until the driver spends
+# minutes inside BigInteger.multiply during planning (measured: an
+# 11-edge graph took 464 s without a per-round reset, ~20 s with it). A
+# parquet read re-derives real stats and cuts the chain.
+_OUTER_RESET_EVERY = 1
 
 # stats of the most recent scc_distributed run (read by tools/scc_dag_bench)
 LAST_RUN_STATS: dict = {}
+_STATS = ("trim_passes", "peeled_by_trim", "peeled_by_color")
+
+
+def _trim(rem_v: DataFrame, n_rem: int, pe: DataFrame, trim_passes: int,
+          max_inner: int) -> superstep.KernelRun:
+    """Peel singleton SCCs — vertices with no in- or no out-edges within
+    their part — pass after pass; the run's state is the surviving core
+    (id, part). Trim passes are 10x cheaper than a coloring fixpoint, so
+    trimming continues while a pass peels >= 5% of the remainder (the
+    acyclic bulk of real link graphs drains here); past `trim_passes`
+    passes a low-yield pass (a long path peels 2 per pass) stops it and
+    the partition refinement takes over."""
+
+    def step(core: DataFrame, _r: int, last: dict):
+        live = (
+            pe.join(core.select(F.col("id").alias("a")), "a", "leftsemi")
+            .join(core.select(F.col("id").alias("b")), "b", "leftsemi")
+        )
+        nxt = core.join(
+            live.select(F.col("a").alias("id")).distinct(), "id", "leftsemi"
+        ).join(live.select(F.col("b").alias("id")).distinct(), "id", "leftsemi")
+        n = F.count(F.lit(1))
+        return nxt, {"n": n, "peeled": F.lit(last["n"]) - n}
+
+    def done(row: dict) -> bool:
+        prev = row["n"] + row["peeled"]
+        return row["peeled"] == 0 or (
+            row["round"] >= trim_passes and row["peeled"] < 0.05 * prev
+        )
+
+    return superstep.run(
+        rem_v.sparkSession, step, lambda: (rem_v, {"n": n_rem}),
+        max_iter=max_inner, done=done,
+    )
 
 
 def scc_distributed(
@@ -256,118 +291,38 @@ def scc_distributed(
     uninterrupted run's labels; after an outer-budget raise, resume with
     a larger `max_outer` CONTINUES rather than restarting.
     `return_run=True` wraps the result in KernelRun with per-outer-round
-    (peeled, wall_ms) metrics."""
-    t0 = time.time()
+    (peeled, remaining, cumulative trim/color stats, wall_ms) metrics."""
     src, dst = id_cols
-    spark = edges.sparkSession
     raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     e = (
         raw.where(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # vertices come from the PRE-self-loop-filter edge set: a vertex that
-    # appears only in self-loops is a singleton SCC in networkx (the first
-    # trim pass peels it, since it has no remaining in/out edges)
-    verts = (
-        raw.select(F.col("a").alias("id"))
-        .union(raw.select(F.col("b").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    done_parts: list[DataFrame] = []
-    rdir = _ResetDir("scc")
-    # Loop-carried frames round-trip through PARQUET once per outer round
-    # (one _ResetDir per frame — a shared one would delete a still-live
-    # dir). localCheckpoint PRESERVES the parent plan's Catalyst stats, and
-    # SizeInBytesOnlyStatsPlanVisitor.visitJoin MULTIPLIES child
-    # sizeInBytes as BigInt — so chaining checkpointed joins round after
-    # round grows the estimate's DIGIT COUNT exponentially until the
-    # driver spends minutes inside BigInteger.multiply during planning
-    # (measured: an 11-edge graph took 464 s before this reset, ~20 s
-    # after). A parquet read re-derives real stats and cuts the chain.
-    rdir_v = _ResetDir("scc_v")
-    rdir_e = _ResetDir("scc_e")
-    stats = {"outer_rounds": 0, "trim_passes": 0,
-             "peeled_by_trim": 0, "peeled_by_color": 0}
-    durable = checkpoint_dir is not None
-    ckpt = (
-        SuperstepCheckpointer(checkpoint_dir, run_id, ("id", "component"))
-        if durable
-        else None
-    )
-    outer_start = 0
-    metrics = []
-    rem_v = None
-    if durable and resume:
-        secs, done_rounds, was_conv, meta = ckpt.resume_sections(spark)
-        if secs is not None:
-            done_parts.append(secs["done"])
-            rem_v = secs["rem_v"]
-            rem_e = secs["rem_e"]
-            n_rem = 0 if was_conv else rem_v.count()
-            outer_start = done_rounds
-            stats.update(meta.get("stats", {}))
-    if rem_v is None:
-        rem_v = verts.select(
-            "id", F.lit(0).cast("long").alias("part")
-        ).localCheckpoint(eager=True)
-        rem_e = e  # invariant: both ends remaining; same-part filter each round
-        n_rem = rem_v.count()
-    LAST_RUN_STATS.clear()
-    LAST_RUN_STATS.update(stats)
 
-    def _done_union() -> DataFrame:
-        if not done_parts:
-            return verts.select("id", F.col("id").alias("component")).limit(0)
-        out = done_parts[0]
-        for part in done_parts[1:]:
-            out = out.union(part)
-        return out
-
-    it0 = 0.0
-    round_rem0 = 0
-    outer = outer_start
-
-    def _end_round(converged: bool) -> None:
-        """Record the round's metrics; durable runs persist the three
-        state sections (the parquet write doubles as the lineage reset),
-        non-durable in-progress rounds keep the _ResetDir rotation."""
-        nonlocal rem_v, rem_e
-        wall_ms = (time.time() - it0) * 1000.0
-        metrics.append(
-            {"round": outer + 1, "peeled": round_rem0 - n_rem, "wall_ms": wall_ms}
+    def init():
+        # vertices come from the PRE-self-loop-filter edge set: a vertex
+        # that appears only in self-loops is a singleton SCC in networkx
+        # (the first trim pass peels it: no remaining in/out edges)
+        n = Observation()
+        verts = (
+            raw.select(F.col("a").alias("id"))
+            .union(raw.select(F.col("b").alias("id")))
+            .distinct()
+            .observe(n, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
         )
-        if durable:
-            secs = ckpt.write_sections(
-                # a converged round has no remainder: write empty sections
-                # instead of the stale (possibly large) round-start edges
-                {
-                    "done": _done_union(),
-                    "rem_v": rem_v if not converged else rem_v.limit(0),
-                    "rem_e": rem_e if not converged else rem_e.limit(0),
-                },
-                outer + 1,
-                wall_ms,
-                round_rem0 - n_rem,
-                converged,
-                lineage_of="done",
-                extra_meta={"stats": dict(stats)},
-            )
-            done_parts[:] = [secs["done"]]
-            rem_v, rem_e = secs["rem_v"], secs["rem_e"]
-        elif not converged:
-            rem_v = rdir_v.reset(rem_v, outer)
-            rem_e = rdir_e.reset(rem_e, outer)
+        # invariant of rem_e: both ends remaining; the same-part filter
+        # runs each round
+        return {
+            "done": verts.select("id", F.col("id").alias("component")).limit(0),
+            "rem_v": verts.select("id", F.lit(0).cast("long").alias("part")),
+            "rem_e": e,
+        }, {"remaining": n.get["n"], **{k: 0 for k in _STATS}}
 
-    rounds_done = outer_start
-    for outer in range(outer_start, max_outer):
-        if n_rem == 0:
-            break
-        it0 = time.time()
-        round_rem0 = n_rem
-        rounds_done = outer + 1
-        stats["outer_rounds"] = outer + 1
+    def outer(state: dict, _r: int, last: dict):
+        done, rem_v, rem_e = state["done"], state["rem_v"], state["rem_e"]
+        stats = {k: last[k] for k in _STATS}
         # --- 0. restrict edges to same-part pairs (sound: a cross-part
         # edge lies on no cycle) ---
         pe = (
@@ -381,52 +336,32 @@ def scc_distributed(
             .select("a", "b")
             .localCheckpoint(eager=True)
         )
-        # --- 1. trim singleton SCCs (no in- or no out-edges within part).
-        # Trim passes are 10x cheaper than a coloring fixpoint, so keep
-        # trimming while a pass peels >= 5% of the remainder (the acyclic
-        # bulk of real link graphs drains here, as before); past
-        # `trim_passes` passes a low-yield trim (a long path peels 2 per
-        # pass) stops and the partition refinement takes over ---
-        tp = 0
-        while tp < max_inner:
-            has_out = pe.select(F.col("a").alias("id")).distinct()
-            has_in = pe.select(F.col("b").alias("id")).distinct()
-            core = rem_v.join(has_out, "id", "leftsemi").join(
-                has_in, "id", "leftsemi"
-            ).localCheckpoint(eager=True)
-            n_core = core.count()
-            if n_core == n_rem:
-                break
-            peeled_now = n_rem - n_core
-            tp += 1
-            stats["trim_passes"] += 1
-            stats["peeled_by_trim"] += peeled_now
-            trimmed = rem_v.join(core, "id", "leftanti").select(
-                "id", F.col("id").alias("component")
-            )
-            done_parts.append(trimmed.localCheckpoint(eager=True))
-            prev = n_rem
-            rem_v, n_rem = core, n_core
-            pe = (
-                pe.join(rem_v.select(F.col("id").alias("a")), "a", "leftsemi")
-                .join(rem_v.select(F.col("id").alias("b")), "b", "leftsemi")
-                .localCheckpoint(eager=True)
-            )
-            if tp >= trim_passes and peeled_now < 0.05 * prev:
-                break  # low-yield tail: hand over to partition refinement
+        # --- 1. trim singleton SCCs ---
+        trim = _trim(rem_v, last["remaining"], pe, trim_passes, max_inner)
+        core, n_rem = trim.labels, trim.last["n"]
+        stats["trim_passes"] += sum(1 for m in trim.metrics if m["peeled"])
+        stats["peeled_by_trim"] += last["remaining"] - n_rem
+        done = done.union(
+            rem_v.join(core, "id", "leftanti").select("id", F.col("id").alias("component"))
+        )
         if n_rem == 0:
-            _end_round(True)
-            break
+            # a converged round has no remainder: write empty sections
+            # instead of the stale (possibly large) round-start edges
+            return {"done": done, "rem_v": core.limit(0), "rem_e": rem_e.limit(0)}, {
+                "peeled": last["remaining"], "remaining": 0, **stats}
+        pe = (
+            pe.join(core.select(F.col("id").alias("a")), "a", "leftsemi")
+            .join(core.select(F.col("id").alias("b")), "b", "leftsemi")
+            .localCheckpoint(eager=True)
+        )
         # --- 2. color: min-label forward propagation with pointer jumping,
         # over HASHED labels struct(xxhash64(id), id) — see module doc.
         # pe is part-restricted, so propagation never crosses parts and the
         # fixpoint needs no part column ---
-        colors = rem_v.select("id", _hlabel(F.col("id")).alias("lbl"))
-        colors = _minlabel_fixpoint(
-            colors, pe, rdir, outer * 1000, max_inner
-        ).withColumnRenamed("lbl", "color")
+        col_of = _minlabel_fixpoint(
+            core.select("id", _hlabel(F.col("id")).alias("lbl")), pe, max_inner
+        ).withColumnRenamed("lbl", "color").localCheckpoint(eager=True)
         # --- 3. backward: same loop on the REVERSED class-restricted edges ---
-        col_of = colors.localCheckpoint(eager=True)
         ce = (
             pe.join(col_of.select(F.col("id").alias("a"), F.col("color").alias("ca")), "a")
             .join(col_of.select(F.col("id").alias("b"), F.col("color").alias("cb")), "b")
@@ -435,8 +370,7 @@ def scc_distributed(
             .localCheckpoint(eager=True)
         )
         bcol = _minlabel_fixpoint(
-            col_of.select("id", _hlabel(F.col("id")).alias("lbl")),
-            ce, rdir, outer * 1000 + 500, max_inner,
+            col_of.select("id", _hlabel(F.col("id")).alias("lbl")), ce, max_inner
         ).withColumnRenamed("lbl", "bcolor")
         joined = col_of.join(bcol, "id").localCheckpoint(eager=True)
         peeled = joined.where(F.col("bcolor") == F.col("color"))
@@ -444,9 +378,11 @@ def scc_distributed(
         # REAL id of each peeled SCC (networkx-comparable convention).
         # color classes are globally unique (a class is named by one vertex)
         comp = peeled.groupBy("color").agg(F.min("id").alias("component"))
-        scc_now = peeled.join(comp, "color").select("id", "component")
-        done_parts.append(scc_now.localCheckpoint(eager=True))
+        done = done.union(
+            peeled.join(comp, "color").select("id", "component").localCheckpoint(eager=True)
+        )
         # --- 4. refine: remainder cells (color, bcolor) are independent ---
+        left = Observation()
         rem_v = (
             joined.where(F.col("bcolor") != F.col("color"))
             .select(
@@ -456,31 +392,34 @@ def scc_distributed(
                     F.col("bcolor.h"), F.col("bcolor.i"),
                 ).alias("part"),
             )
+            .observe(left, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
-        prev_rem, n_rem = n_rem, rem_v.count()
-        stats["peeled_by_color"] += prev_rem - n_rem
-        if n_rem == 0:
-            _end_round(True)
-            break
+        remaining = left.get["n"]
+        stats["peeled_by_color"] += n_rem - remaining
         rem_e = (
             pe.join(rem_v.select(F.col("id").alias("a")), "a", "leftsemi")
             .join(rem_v.select(F.col("id").alias("b")), "b", "leftsemi")
         )
-        _end_round(False)
-    LAST_RUN_STATS.update(stats)
-    if n_rem > 0:
+        return {"done": done, "rem_v": rem_v, "rem_e": rem_e}, {
+            "peeled": last["remaining"] - remaining, "remaining": remaining, **stats}
+
+    res = superstep.run(
+        edges.sparkSession, outer, init, max_iter=max_outer,
+        done=lambda v: v["remaining"] == 0, interval=_OUTER_RESET_EVERY,
+        checkpoint_dir=checkpoint_dir, run_id=run_id, resume=resume,
+    )
+    LAST_RUN_STATS.clear()
+    LAST_RUN_STATS.update(
+        {"outer_rounds": res.rounds, **{k: res.last.get(k, 0) for k in _STATS}}
+    )
+    if not res.converged:
         # refuse to emit wrong labels: leftover vertices are NOT known
         # singletons (outer-round budget exhausted on an adversarial chain).
-        # Durable runs persisted every completed round above, so resuming
-        # with a larger max_outer continues instead of restarting.
+        # Durable runs persisted every completed round, so resuming with a
+        # larger max_outer continues instead of restarting.
         raise RuntimeError(
-            f"scc_distributed: {n_rem} vertices unresolved after "
-            f"{max_outer} outer rounds; raise max_outer"
+            f"scc_distributed: {res.last['remaining']} vertices unresolved "
+            f"after {max_outer} outer rounds; raise max_outer"
         )
-    out = _done_union()
-    if not durable:
-        out = rdir.finalize(out)
-    if return_run:
-        return KernelRun(out, rounds_done, metrics, time.time() - t0, True)
-    return out
+    return res.finish(res.labels["done"], return_run)

@@ -15,8 +15,9 @@ Scale shape: the adjacency table (vertex, sorted out-neighbors) is built
 ONCE (one groupBy; array length = out-degree, so degree-capped graphs
 bound row width); each step is one equi-join of the walker frontier
 against it plus a map-side element_at — no Python, no explode. The
-frontier carries (start, rep, cur) only; state is localCheckpointed on
-the usual cadence so lineage stays constant-depth. walk_length joins is
+frontier carries (start, rep, cur) only; each step is a step of the
+shared superstep loop (operators/superstep.py), so every step's frontier
+is checkpointed once and lineage stays constant-depth. walk_length joins is
 the inherent cost of L-step walks; at 10^12 edges the caller bounds L
 (10-80 in the published recipes) and the per-step join is
 shuffle-partitioned on the current vertex.
@@ -27,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .components import _ResetDir
+from . import superstep
 
 
 def _hstep(seed: str, start, rep, step: int):
@@ -87,50 +88,38 @@ def random_walks(
     frontier = verts.select(F.col("id").alias("start"), reps).select(
         "start", "rep", F.col("start").alias("cur")
     )
-    out = frontier.select(
-        F.col("start").alias("start_id"),
-        "rep",
-        F.lit(0).alias("step"),
-        F.col("cur").alias("vertex"),
-    )
-    rdir = _ResetDir("walks")
-    # the final union re-executes each step's join chain from its last
-    # parquet reset (branches share no cached prefix), so total join work
-    # is bounded at ~2x the L steps (reset window 5) — the deliberate
-    # trade against persisting every step
-    emitted = [out]
-    for t in range(1, walk_length + 1):
-        nxt = (
-            frontier.join(adj, frontier["cur"] == adj["s"])
-            .select(
-                "start",
-                "rep",
-                F.element_at(
-                    F.col("nbrs"),
-                    (
-                        F.pmod(
-                            _hstep(seed, F.col("start"), F.col("rep"), t),
-                            F.size("nbrs"),
-                        )
-                        + 1
-                    ).cast("int"),
-                ).alias("cur"),
-            )
+    # every step's checkpointed frontier, emitted by the final union (its
+    # blocks, not a parquet reset the loop deletes later)
+    emitted = [frontier]
+
+    def step(frontier: DataFrame, t: int, _last: dict):
+        t += 1
+        nxt = frontier.join(adj, frontier["cur"] == adj["s"]).select(
+            "start",
+            "rep",
+            F.element_at(
+                F.col("nbrs"),
+                (
+                    F.pmod(_hstep(seed, F.col("start"), F.col("rep"), t), F.size("nbrs"))
+                    + 1
+                ).cast("int"),
+            ).alias("cur"),
         )
-        if t % 5 == 0:
-            nxt = rdir.reset(nxt, t)
-        frontier = nxt
-        emitted.append(
-            frontier.select(
-                F.col("start").alias("start_id"),
-                "rep",
-                F.lit(t).alias("step"),
-                F.col("cur").alias("vertex"),
-            )
+        return nxt, {}
+
+    def settle(frame: DataFrame, _v: dict) -> DataFrame:
+        emitted.append(frame)
+        return frame
+
+    superstep.run(e.sparkSession, step, lambda: (frontier, {}),
+                  max_iter=walk_length, settle=settle)
+    res = None
+    for t, fr in enumerate(emitted):
+        fr = fr.select(
+            F.col("start").alias("start_id"), "rep", F.lit(t).alias("step"),
+            F.col("cur").alias("vertex"),
         )
-    res = emitted[0]
-    for fr in emitted[1:]:
-        res = res.unionByName(fr)
+        res = fr if res is None else res.unionByName(fr)
     return res
 
 

@@ -106,48 +106,30 @@ def main() -> None:
         edges = spark.read.parquet(args.edges)
 
     run_id = args.run_id or args.kernel
-    durable = dict(checkpoint_dir=args.checkpoint_dir, run_id=run_id,
-                   resume=args.resume)
+    kw = dict(checkpoint_dir=args.checkpoint_dir, run_id=run_id, resume=args.resume)
+    if args.max_iter:
+        # scc's outer budget has its own name; the rest share max_iter
+        kw["max_outer" if args.kernel == "scc" else "max_iter"] = args.max_iter
     if args.kernel == "pagerank":
-        kw = dict(tol=args.tol, **durable)
-        if args.max_iter:
-            kw["max_iter"] = args.max_iter
-        run = pagerank_distributed(edges, **kw)
+        run = pagerank_distributed(edges, tol=args.tol, **kw)
         out_df, rounds, converged = run.ranks, run.supersteps, run.converged
         metrics = run.deltas
-    elif args.kernel == "eig":
-        kw = dict(tol=args.tol, return_run=True, **durable)
-        if args.max_iter:
-            kw["max_iter"] = args.max_iter
-        run = eigenvector_distributed(edges, **kw)
-        out_df, rounds, converged = run.labels, run.rounds, run.converged
-        metrics = run.metrics
-    elif args.kernel == "hits":
-        # hits convergence uses nx's raw (unscaled) tol; 1e-6 default is
-        # too loose a default there, so map the shared flag through as-is
-        kw = dict(tol=args.tol, return_run=True, **durable)
-        if args.max_iter:
-            kw["max_iter"] = args.max_iter
-        run = hits_distributed(edges, **kw)
-        out_df, rounds, converged = run.labels, run.rounds, run.converged
-        metrics = run.metrics
     else:
+        # (kernel function, extra arguments); hits convergence uses nx's
+        # raw (unscaled) tol, the shared flag maps through as-is
         fns = {
-            "cc": components_distributed,
-            "lpa": lpa_distributed,
-            "scc": scc_distributed,
-            "sssp": sssp_distributed,
-            "wsssp": wsssp_distributed,
-            "treach": temporal_reachability,
+            "eig": (eigenvector_distributed, {"tol": args.tol}),
+            "hits": (hits_distributed, {"tol": args.tol}),
+            "cc": (components_distributed, {}),
+            "lpa": (lpa_distributed, {}),
+            "scc": (scc_distributed, {}),
+            "sssp": (sssp_distributed, {"source": args.source}),
+            "wsssp": (wsssp_distributed, {"source": args.source}),
+            "treach": (temporal_reachability, {"source": args.source}),
         }
-        kw = dict(return_run=True, **durable)
-        if args.max_iter:
-            # scc's outer budget has its own name; the rest share max_iter
-            kw["max_outer" if args.kernel == "scc" else "max_iter"] = args.max_iter
-        if args.kernel in ("sssp", "wsssp", "treach"):
-            if args.source is None:
-                ap.error(f"--source is required for --kernel {args.kernel}")
-            kw["source"] = args.source
+        fn, extra = fns[args.kernel]
+        if "source" in extra and args.source is None:
+            ap.error(f"--source is required for --kernel {args.kernel}")
         if args.kernel == "treach" and "ts" not in edges.columns:
             ap.error(
                 "--kernel treach needs a 'ts' column; pass --edges with "
@@ -159,7 +141,7 @@ def main() -> None:
                 "derived bipartite table is unweighted — pass --edges with "
                 "(src, dst, w)"
             )
-        run = fns[args.kernel](edges, **kw)
+        run = fn(edges, return_run=True, **extra, **kw)
         out_df, rounds, converged = run.labels, run.rounds, run.converged
         metrics = run.metrics
 

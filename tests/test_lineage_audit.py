@@ -134,3 +134,40 @@ def test_torn_marker_is_ignored_by_resume_and_audit(tmp_path, spark, monkeypatch
     assert all(abs(got[k] - v) <= 1e-6 for k, v in exp.items())
     rep = audit(spark, ck, "part")
     assert rep["ok"], rep
+
+
+def test_lineage_redo_after_crash_before_marker(tmp_path, spark, monkeypatch):
+    # A crash after round k's state and lineage rows are written but before
+    # its _DONE_k marker publishes: resume redoes round k, and its lineage
+    # rows must replace the first attempt's, not add a second copy.
+    from deeprank_spark.operators import superstep
+
+    audit = _load_audit()
+    n = 30
+    edges = [(i, i + 1) for i in range(n - 1)]
+    e = spark.createDataFrame(edges, "src long, dst long")
+    ck = str(tmp_path / "ck")
+    kw = dict(checkpoint_dir=ck, run_id="cc", checkpoint_interval=2)
+
+    real = superstep.write_marker
+
+    def crash_at_round_4(base, step, meta):
+        if step == 4:
+            raise OSError("crash before the marker is published")
+        real(base, step, meta)
+
+    monkeypatch.setattr(superstep, "write_marker", crash_at_round_4)
+    with pytest.raises(OSError, match="crash before"):
+        components_distributed(e, **kw)
+    monkeypatch.undo()
+
+    resumed = components_distributed(e, resume=True, return_run=True, **kw)
+    assert resumed.converged and resumed.metrics[0]["round"] == 3
+    assert {r["id"]: r["component"] for r in resumed.labels.collect()} == {
+        i: 0 for i in range(n)
+    }
+    rep = audit(spark, ck, "cc")
+    assert rep["ok"], rep
+    lin = superstep.read_kernel_lineage(spark, ck, "cc").toPandas()
+    assert (lin.groupby("superstep")["rows"].sum() == n).all()
+    assert 4 in set(lin["superstep"])

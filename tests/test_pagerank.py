@@ -14,8 +14,8 @@ from deeprank_spark.operators.pagerank import (
     _conv_pagerank_pdf,
     pagerank_distributed,
     pagerank_per_conv,
-    read_lineage,
 )
+from deeprank_spark.operators.superstep import read_kernel_lineage as read_lineage
 from deeprank_spark.transcripts import small_transcripts, tiny_transcripts, transcripts_sdf
 
 ATOL = 1.0e-6

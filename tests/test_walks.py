@@ -41,16 +41,19 @@ EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (2, 4), (4, 5), (1, 3)]
 
 def test_walks_match_python_mirror(spark):
     e = spark.createDataFrame(EDGES, "src long, dst long")
-    rows = random_walks(e, walks_per_vertex=3, walk_length=6).collect()
-    got = {}
-    for r in rows:
-        got.setdefault((r["start_id"], r["rep"]), {})[r["step"]] = r["vertex"]
-    exp = _py_walks(EDGES, 3, 6)
-    assert set(got) == set(exp)
-    for key, path in exp.items():
-        steps = got[key]
-        assert [steps[i] for i in range(len(path))] == path
-        assert len(steps) == len(path)  # sink walks stop emitting
+    # 12 steps span two lineage resets of the superstep loop: the output
+    # must not depend on a reset the loop has since deleted
+    for length in (6, 12):
+        rows = random_walks(e, walks_per_vertex=3, walk_length=length).collect()
+        got = {}
+        for r in rows:
+            got.setdefault((r["start_id"], r["rep"]), {})[r["step"]] = r["vertex"]
+        exp = _py_walks(EDGES, 3, length)
+        assert set(got) == set(exp)
+        for key, path in exp.items():
+            steps = got[key]
+            assert [steps[i] for i in range(len(path))] == path
+            assert len(steps) == len(path)  # sink walks stop emitting
 
 
 def test_walks_paths_and_reproducibility(spark):

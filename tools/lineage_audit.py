@@ -2,12 +2,14 @@
 
     python tools/lineage_audit.py <checkpoint_dir> <run_id>
 
-Validates the on-disk contract that resume and recovery depend on
-(operators/superstep.py; pagerank.py writes the same layout):
+Validates the on-disk contract that resume and recovery depend on, the
+layout operators/superstep.py's one writer leaves for every kernel:
 
   1. every `_DONE_<k>` marker has its `superstep=<k>` parquet state
      (flat frame, or the per-section subdirs the marker names);
-  2. the lineage table has rows for every completed round;
+  2. the lineage table (one `lineage/superstep=<k>/` partition per
+     round, overwritten when a round is redone) has rows for every
+     completed round;
   3. the newest round's durable state is CONTENT-VERIFIED: its row count
      and the XOR-fold of its per-row hashes are recomputed from the
      parquet and compared to what the lineage table recorded at write
@@ -18,7 +20,8 @@ Validates the on-disk contract that resume and recovery depend on
 
 Prints one JSON line {"ok": bool, ...} and exits nonzero on any mismatch.
 PageRank state (a double `rank` column) is hashed through the same
-12-decimal format_number normalization pagerank._lineage_rows uses.
+12-decimal format_number normalization the writer applies
+(superstep._hash_cols).
 """
 
 from __future__ import annotations
